@@ -38,7 +38,8 @@ object Graph {
     *
     * Iterative-plan hygiene is the [[Dedup.connectedComponents]]
     * pattern: eager localCheckpoint per iterate, previous iterate
-    * released as soon as the next materializes.
+    * released as soon as the next materializes; the returned final
+    * iterate is released by the caller's next `Intermediates.sweep`.
     *
     * Input: (srcCol, dstCol) edge list; duplicates are collapsed.
     * Output: (node, rank_e9) for every node on either edge side. */
@@ -86,7 +87,7 @@ object Graph {
         .localCheckpoint()
       Intermediates.release(prev)
     }
-    rank.select(col("node"), col("rank_e9"))
+    Intermediates.releaseOnSweep(rank).select(col("node"), col("rank_e9"))
   }
 
   /** A [[pageRankE9Bucketed]] result: ranks plus the measured plan

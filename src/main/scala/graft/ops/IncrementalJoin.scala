@@ -126,7 +126,18 @@ object IncrementalJoin {
     val newProps = Map(FactVersionProp -> factCur.toString,
       DimVersionProp -> dimCur.toString,
       JoinTypeProp -> jt, JoinKeysProp -> joinKeys.mkString(","))
-    val dim0 = ManifestTable.read(spark, dimPath)
+    // Two sink tables (e.g. the latest view over `prices` and `assets`)
+    // carry their committed partition column under one name; the dim's
+    // copy is its layout, not enrichment, so it drops. Any other
+    // non-key column both sides share would duplicate in the view.
+    val factNonKey = ManifestTable.read(spark, factPath).columns.toSet -- joinKeys
+    val dimPart = ManifestTable.partitionColOf(
+      ManifestTable.readManifest(dimFs, dimPath, dimCur)).filter(factNonKey)
+    val dim0 = ManifestTable.read(spark, dimPath).drop(dimPart.toSeq: _*)
+    val clash = dim0.columns.filter(factNonKey)
+    require(clash.isEmpty, s"IncrementalJoin.refresh: column(s) " +
+      s"${clash.mkString(", ")} exist in both the fact and the dim — rename " +
+      "one side (only join keys may be shared)")
     // left_outer views carry a null-extended DIM-SIDE COPY of each key
     // ([[dimKeyCol]]): the join's own key column is the fact's
     val dim =

@@ -1,9 +1,10 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** INCREMENTAL LATEST-STATE VIEW MAINTENANCE over a [[ManifestTable]]
   * — the maintained form of the reference's HEADLINE view
@@ -30,19 +31,23 @@ import org.apache.spark.sql.functions._
   *      props (atomic with the view data — one manifest rename, so
   *      the applied-but-unrecorded double-fold window cannot exist).
   *   2. Changed base partitions = manifest-entry diff (driver-side).
-  *   3. A PURELY ADDITIVE delta (only brand-new partitions) folds
-  *      incrementally: the new partitions' per-key latest rows merge
-  *      into the view's affected key-hash buckets (read affected
-  *      buckets ∪ delta-latest → one window over the union →
-  *      replaceTouched). Cost: O(batch + affected buckets).
-  *   4. A RETRACTION (a rewritten or removed base partition) folds
-  *      by KEYED RECOMPUTE: argmax cannot subtract, but the affected
-  *      keys are knowable (rows in a changed partition's old or new
-  *      content), their new latest rows come from one keyed semi-join
-  *      scan of the current base, and only their hash buckets
-  *      rewrite — O(affected keys' rows), never O(history). The full
-  *      rebuild remains only for first build, lapsed retention, or a
-  *      spec change.
+  *   3. ONE FOLD covers every data delta. Candidates: the view's
+  *      rows in the affected key-hash buckets, each flagged RETRACTED
+  *      when its `(keys, ord)` tuple is (null-safely) in a changed
+  *      partition's OLD content, plus the changed partitions' NEW
+  *      content. One window (ord DESC NULLS LAST, new rows first on a
+  *      tie) picks each key's row; replaceTouched rewrites the
+  *      buckets. Cost: O(delta + affected buckets), no history read.
+  *   4. A key whose winner is retracted is RESIDUAL (its latest row
+  *      was deleted or lowered) and only those keys recompute, from
+  *      one keyed semi-join scan of the base. Exact: ord tuples are
+  *      unique per key, so a retracted latest `t_old` beat every row
+  *      of its key in the unchanged partitions and any new row
+  *      ≥ `t_old` is the argmax; a non-retracted view row still sits
+  *      in an unchanged partition. The winners persist once; one
+  *      aggregate counts residual keys and null-ord written rows
+  *      ([[OrdNonNullProp]]), and the write reads them back. The full
+  *      rebuild remains for first build, lapsed retention, spec change.
   *
   * CONTRACTS: `keys` non-null ([[ManifestTable.merge]] refuses null
   * keys on the base anyway); the `ordCols` tuple must be UNIQUE per
@@ -86,13 +91,18 @@ object IncrementalLatest {
     * answered from one pre-joined table). */
   val PartitionColName = "__lbucket"
   private val BucketCol = PartitionColName
+  // refresh-internal: candidate source (view 0, new content 1), retracted flag
+  private val SrcCol = "__lsrc"
+  private val RetractedCol = "__lretracted"
 
   /** What a [[refresh]] did: `committed` is false only for the
-    * already-current no-op; `incremental` is false when the view was
-    * fully rebuilt (first build, lapsed retention, spec change, or a
-    * retraction in the base delta). */
+    * already-current no-op; `incremental` is false for a full rebuild;
+    * `keyedRetraction` is true when a pre-existing base partition was
+    * rewritten or removed; `residualKeys` counts keys recomputed from
+    * the base (step 4). */
   final case class RefreshResult(incremental: Boolean, committed: Boolean,
-                                 keyedRetraction: Boolean = false)
+                                 keyedRetraction: Boolean = false,
+                                 residualKeys: Long = 0L)
 
   /** The maintained view: exactly the base's columns, one row per
     * live key. */
@@ -107,10 +117,10 @@ object IncrementalLatest {
   /** The per-key latest row of `df` under the maintained comparator
     * (each ord column DESC, NULLS LAST — the [[Ops.latestPerKey]]
     * window). */
-  private def latestRows(df: DataFrame, keys: Seq[String],
-                         ordCols: Seq[String]): DataFrame = {
+  private def latestRows(df: DataFrame, keys: Seq[String], ordCols: Seq[String],
+                         tieBreak: Seq[Column] = Nil): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(ordCols.map(col(_).desc): _*)
+      .orderBy(ordCols.map(col(_).desc) ++ tieBreak: _*)
     df.withColumn("__lrn", row_number().over(w))
       .filter(col("__lrn") === 1).drop("__lrn")
   }
@@ -168,8 +178,8 @@ object IncrementalLatest {
     // rows that can change the view), chained on the previous
     // version's certificate for the buckets it does not touch.
     val prevCertified = recorded.get(OrdNonNullProp).contains("true")
-    def writtenRowsCertified(df: DataFrame): Boolean =
-      df.filter(ordCols.map(col(_).isNull).reduce(_ || _)).isEmpty
+    val nullOrd = ordCols.map(col(_).isNull).reduce(_ || _)
+    def writtenRowsCertified(df: DataFrame): Boolean = df.filter(nullOrd).isEmpty
     def propsCert(certified: Boolean): Map[String, String] =
       if (certified) props + (OrdNonNullProp -> "true") else props
     def withBucket(df: DataFrame): DataFrame =
@@ -201,53 +211,6 @@ object IncrementalLatest {
     val newDirs = ManifestTable.partitionDirs(baseFs, basePath, baseCur)
     val changed = (oldDirs.keySet ++ newDirs.keySet)
       .filter(k => oldDirs.get(k) != newDirs.get(k))
-    // A RETRACTION (rewritten or removed partition) might have held a
-    // key's current latest row, and argmax cannot subtract — but it
-    // CAN recompute per key: the affected keys are exactly those with
-    // rows in a changed partition's old or new content, and their new
-    // latest rows come from ONE keyed scan of the current base
-    // (left-semi against the affected key set — the join-prune rule
-    // and committed key blooms turn this into a dirs-holding-the-keys
-    // read at scale). Unaffected keys carry verbatim, so the view
-    // rewrite touches only the affected keys' hash buckets. A
-    // one-partition rectification thus costs O(affected keys' rows),
-    // never O(history) — the full rebuild remains only for first
-    // build / lapsed retention / spec changes.
-    if (changed.exists(oldDirs.keySet)) {
-      val minus = changed.intersect(oldDirs.keySet)
-      val plus = changed.intersect(newDirs.keySet)
-      val affectedKeys = Seq(
-        if (minus.isEmpty) None
-        else Some(ManifestTable.readKeys(spark, basePath, prevV, minus)
-          .select(keys.map(col): _*)),
-        if (plus.isEmpty) None
-        else Some(ManifestTable.readKeys(spark, basePath, baseCur, plus)
-          .select(keys.map(col): _*))
-      ).flatten.reduce(_ unionByName _).distinct()
-      val latestFor = latestRows(
-        ManifestTable.read(spark, basePath).join(affectedKeys, keys, "left_semi"),
-        keys, ordCols)
-      // affected buckets come from the KEY set (a key whose rows all
-      // vanished must still have its bucket rewritten to DROP it)
-      val affected = withBucket(affectedKeys).select(col(BucketCol))
-        .distinct().collect().map(_.getString(0)).toSet
-      val readable = affected.intersect(ManifestTable.partitionKeys(viewFs, viewPath))
-      val kept =
-        if (readable.isEmpty) read(spark, viewPath).limit(0)
-        else ManifestTable.read(spark, viewPath,
-          partitionFilter = readable.contains).drop(BucketCol)
-          .join(affectedKeys, keys, "left_anti")
-      // kept and latestFor hold DISJOINT key sets, each one row per
-      // key — the union IS the buckets' complete new content
-      val folded = withBucket(kept.unionByName(latestFor))
-      ManifestTable.merge(spark, viewPath, folded, keys = keys,
-        partitionCol = BucketCol, retainVersions = retainVersions,
-        replaceTouched = true, knownTouched = Some(affected),
-        props = propsCert(prevCertified && writtenRowsCertified(folded)),
-        statsColumns = statsColumns, sumColumns = sumColumns)
-      return RefreshResult(incremental = true, committed = true,
-        keyedRetraction = true)
-    }
 
     if (changed.isEmpty) {
       // metadata-only base commit: advance the watermark with a
@@ -261,28 +224,65 @@ object IncrementalLatest {
       return RefreshResult(incremental = true, committed = true)
     }
 
-    // Purely additive delta: the new partitions' per-key latest rows.
-    val delta = latestRows(
-      ManifestTable.readKeys(spark, basePath, baseCur, changed), keys, ordCols)
-    val deltaB = withBucket(delta)
-    val affected = deltaB.select(col(BucketCol)).distinct()
-      .collect().map(_.getString(0)).toSet
+    // The delta: the changed partitions' OLD content (rewritten or
+    // removed — a retraction) and NEW content (rewritten or added).
+    def content(v: Long, parts: Set[String]): Option[DataFrame] =
+      if (parts.isEmpty) None
+      else Some(ManifestTable.readKeys(spark, basePath, v, parts))
+    val oldRows = content(prevV, changed.intersect(oldDirs.keySet))
+    val newRows = content(baseCur, changed.intersect(newDirs.keySet))
+    // affected buckets come from the delta's KEY set (a key whose rows
+    // all vanished must still have its bucket rewritten to DROP it)
+    val affected = withBucket((oldRows ++ newRows)
+        .map(_.select(keys.map(col): _*)).reduce(_ unionByName _))
+      .select(col(BucketCol)).distinct().collect().map(_.getString(0)).toSet
     val readable = affected.intersect(ManifestTable.partitionKeys(viewFs, viewPath))
-    val existing =
+    val current =
       if (readable.isEmpty) read(spark, viewPath).limit(0)
       else ManifestTable.read(spark, viewPath,
         partitionFilter = readable.contains).drop(BucketCol)
-    // one window over (affected buckets' current rows ∪ delta latest):
-    // keys in the delta fold to the greater tuple, keys not in the
-    // delta keep their row verbatim — the bucket's complete new
-    // content for replaceTouched
-    val folded = withBucket(latestRows(
-      existing.unionByName(deltaB.drop(BucketCol)), keys, ordCols))
-    ManifestTable.merge(spark, viewPath, folded, keys = keys,
-      partitionCol = BucketCol, retainVersions = retainVersions,
-      replaceTouched = true, knownTouched = Some(affected),
-      props = propsCert(prevCertified && writtenRowsCertified(folded)),
-      statsColumns = statsColumns, sumColumns = sumColumns)
-    RefreshResult(incremental = true, committed = true)
+    // step 3: a current row whose (keys, ord) tuple sat in old content
+    // is RETRACTED (null-safe match — the ord may be null)
+    val tuple = keys ++ ordCols
+    val flagged = oldRows match {
+      case None => current.withColumn(RetractedCol, lit(false))
+      case Some(old) =>
+        val gone = old.select(tuple.map(c => col(c).as(s"__old_$c")): _*)
+        current.join(gone, tuple.map(c => col(c) <=> col(s"__old_$c")).reduce(_ && _),
+            "left")
+          .select(current.columns.toSeq.map(col) :+
+            col(s"__old_${keys.head}").isNotNull.as(RetractedCol): _*)
+    }
+    // one window; a rewritten row's new copy beats its old one on a tie
+    val candidates = newRows.foldLeft(flagged.withColumn(SrcCol, lit(0))) {
+      (acc, n) => acc.unionByName(
+        n.withColumn(RetractedCol, lit(false)).withColumn(SrcCol, lit(1)))
+    }
+    val winners = latestRows(candidates, keys, ordCols, Seq(col(SrcCol).desc))
+      .drop(SrcCol).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // step 4: one aggregate counts residual keys and null-ord rows
+      val counts = winners.agg(count(when(col(RetractedCol), 1)),
+        count(when(!col(RetractedCol) && nullOrd, 1))).head()
+      val settled = winners.filter(!col(RetractedCol)).drop(RetractedCol)
+      // residual keys recompute from ONE keyed semi-join scan of the
+      // current base (the join-prune rule and committed key blooms
+      // narrow it to the dirs holding those keys)
+      val recomputed =
+        if (counts.getLong(0) == 0) None
+        else Some(latestRows(ManifestTable.read(spark, basePath).join(
+          winners.filter(col(RetractedCol)).select(keys.map(col): _*),
+          keys, "left_semi"), keys, ordCols))
+      val certified = prevCertified && counts.getLong(1) == 0 &&
+        recomputed.forall(writtenRowsCertified)
+      ManifestTable.merge(spark, viewPath,
+        withBucket(recomputed.foldLeft(settled)(_ unionByName _)), keys = keys,
+        partitionCol = BucketCol, retainVersions = retainVersions,
+        replaceTouched = true, knownTouched = Some(affected),
+        props = propsCert(certified),
+        statsColumns = statsColumns, sumColumns = sumColumns)
+      RefreshResult(incremental = true, committed = true,
+        keyedRetraction = oldRows.nonEmpty, residualKeys = counts.getLong(0))
+    } finally winners.unpersist(blocking = false)
   }
 }

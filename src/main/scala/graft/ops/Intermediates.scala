@@ -39,7 +39,8 @@ import org.apache.spark.storage.StorageLevel
   */
 object Intermediates {
 
-  private val registry = mutable.Map.empty[String, mutable.Buffer[DataFrame]]
+  /** Per session: the release action of each registered frame. */
+  private val registry = mutable.Map.empty[String, mutable.Buffer[() => Unit]]
 
   /** One warning per session when the unswept count crosses this —
     * persist pins blocks in the CacheManager (unlike the checkpoints
@@ -59,10 +60,21 @@ object Intermediates {
     * checkpoints. */
   def shared(df: DataFrame): DataFrame = {
     df.persist(StorageLevel.MEMORY_AND_DISK)
+    register(df)(() => df.unpersist(blocking = false))
+  }
+
+  /** Register an eagerly-checkpointed frame a function RETURNS (an
+    * iterative loop's final iterate) for [[release]] at the owning
+    * session's next [[sweep]] — which runs after the consumer's
+    * action, never before. `Dataset.unpersist` cannot reach such a
+    * frame, so without this its blocks outlive the query. */
+  def releaseOnSweep(df: DataFrame): DataFrame = register(df)(() => release(df))
+
+  private def register(df: DataFrame)(free: () => Unit): DataFrame = {
     val key = ResultCache.sessionKey(df.sparkSession)
     val unswept = registry.synchronized {
       val owned = registry.getOrElseUpdate(key, mutable.Buffer.empty)
-      owned += df
+      owned += free
       owned.size
     }
     if (unswept == WarnUnswept)
@@ -72,16 +84,17 @@ object Intermediates {
     df
   }
 
-  /** Unpersist every intermediate registered for `spark` since the
-    * last sweep; returns how many were released. Harness calls this
-    * after each query's terminal action (Bench.runOnce, Verify's
-    * per-query write). Long-lived services embedding the library
-    * should call it at their own request boundaries. */
+  /** Unpersist (or [[release]], for a checkpoint) every intermediate
+    * registered for `spark` since the last sweep; returns how many
+    * were released. Harness calls this after each query's terminal
+    * action (Bench.runOnce, Verify's per-query write). Long-lived
+    * services embedding the library should call it at their own
+    * request boundaries. */
   def sweep(spark: SparkSession): Int = {
     val key = ResultCache.sessionKey(spark)
     val owned = registry.synchronized(registry.remove(key))
       .getOrElse(mutable.Buffer.empty)
-    owned.foreach(_.unpersist(blocking = false))
+    owned.foreach(_())
     owned.size
   }
 

@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ext.Graph
 import graft.functions.TopKAggregator
-import graft.ops.ResultCache
+import graft.ops.{Intermediates, ResultCache}
 
 /** Coverage for the S8 result-cache analog and the TopKAggregator
   * full-buffer fast path. */
@@ -101,6 +102,22 @@ class CacheSpec extends AnyFunSuite {
     // dead entry never re-caches behind the map's back
     assert(cache.getOrCompute("inflight")(Seq(4).toDF("x")).count() == 1)
     cache.clear()
+  }
+
+  test("PageRank's final checkpoint outlives the consumer's action and the next " +
+    "sweep releases it: cached storage returns to its baseline") {
+    val s = spark.newSession()
+    import s.implicits._
+    def cached() = s.sparkContext.getRDDStorageInfo.map(i => i.id -> i.name).toSet
+    Intermediates.sweep(s)
+    val baseline = cached()
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    val ranks = Graph.pageRankE9(
+      edges.unionByName(edges.select($"dst".as("src"), $"src".as("dst"))), iters = 3)
+    assert(ranks.orderBy($"node").collect().length == 4)
+    assert(cached() != baseline, "the returned iterate must stay live until the sweep")
+    Intermediates.sweep(s)
+    assert(cached() == baseline, s"left cached after the sweep: ${cached() -- baseline}")
   }
 
   test("SQL surface: registered graft functions work through spark.sql over temp views") {

@@ -151,6 +151,50 @@ class EtlSpec extends AnyFunSuite {
     assert(rows(Incremental.readPrices(spark, base).select(p2.columns.map(col): _*)) == rows(p2))
   }
 
+  test("latest view ⋈ assets over the durable sink refreshes incrementally across " +
+    "two runs and matches vLatestPrices; a shared non-key column is refused") {
+    import graft.ops.{IncrementalJoin, IncrementalLatest, ManifestTable}
+    val c1 = chart(
+      ("bitcoin", Seq(Seq(ms("2024-01-01 01:00:00"), 100.0), Seq(ms("2024-01-01 02:00:00"), 110.0)),
+        Seq(Seq(ms("2024-01-01 02:00:00"), 1000.0)), Seq(Seq(ms("2024-01-01 02:00:00"), 10.0))),
+      ("ethereum", Seq(Seq(ms("2024-01-01 01:00:00"), 50.0)),
+        Seq(Seq(ms("2024-01-01 01:00:00"), 500.0)), Seq(Seq(ms("2024-01-01 01:00:00"), 5.0))))
+    // overlapping re-fetch: bitcoin's 02:00 corrected, a new 01-02 point
+    val c2 = chart(
+      ("bitcoin", Seq(Seq(ms("2024-01-01 02:00:00"), 111.0), Seq(ms("2024-01-02 03:00:00"), 120.0)),
+        Seq(Seq(ms("2024-01-02 03:00:00"), 1200.0)), Seq(Seq(ms("2024-01-02 03:00:00"), 12.0))),
+      ("ethereum", Seq(Seq(ms("2024-01-01 01:00:00"), 51.0)),
+        Seq(Seq(ms("2024-01-01 01:00:00"), 510.0)), Seq(Seq(ms("2024-01-01 01:00:00"), 5.1))))
+    val base = java.nio.file.Files.createTempDirectory("graft_etl_ljoin_").toString
+    val (lview, ljoin) = (s"$base/lview", s"$base/ljoin")
+    def refresh(): IncrementalJoin.RefreshResult = {
+      IncrementalLatest.refresh(spark, s"$base/prices", lview, Seq("asset_id"), Seq("ts"))
+      IncrementalJoin.refresh(spark, lview, s"$base/assets", ljoin, Seq("asset_id"),
+        Seq("asset_id"), IncrementalLatest.PartitionColName)
+    }
+    def check(): Unit = {
+      val want = CryptoViews.vLatestPrices(Incremental.readPrices(spark, base),
+        Incremental.readAssets(spark, base))
+      val got = IncrementalJoin.read(spark, ljoin).select(want.columns.map(col): _*)
+      assert(got.collect().map(_.toString).sorted.toSeq ==
+        want.collect().map(_.toString).sorted.toSeq)
+    }
+    Incremental.runOnManifest(spark, markets, c1, base, runTs)
+    assert(refresh().full)
+    check()
+    Incremental.runOnManifest(spark, markets, c2, base, ts("2024-01-02 04:10:00"))
+    val r = refresh()
+    assert(r.committed && !r.full, s"the second run must fold incrementally: $r")
+    check()
+
+    val dim = s"$base/dim"
+    ManifestTable.merge(spark, dim, Seq(("bitcoin", "x", "p0")).toDF("asset_id", "source", "pd"),
+      Seq("asset_id"), "pd")
+    val e = intercept[IllegalArgumentException](IncrementalJoin.refresh(spark, lview, dim,
+      s"$base/bad", Seq("asset_id"), Seq("asset_id"), IncrementalLatest.PartitionColName))
+    assert(e.getMessage.contains("source"), e.getMessage)
+  }
+
   // -- empty-series -----------------------------------------------------
   test("coin with empty chart emits no price rows and no daily row (P7)") {
     val c = chart(("bitcoin", Seq(), Seq(), Seq()))
