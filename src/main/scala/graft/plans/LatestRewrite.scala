@@ -1,15 +1,13 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.IntegerType
 
-import graft.ops.{GraftFileIndex, IncrementalLatest, ManifestTable}
+import graft.ops.{IncrementalLatest, ManifestTable}
 
 /** LATEST-STATE VIEW REGISTRY — which [[IncrementalLatest]]-maintained
   * views stand for which base tables. Registration is the explicit
@@ -31,27 +29,17 @@ object LatestRegistry {
   final case class LatestDef(basePath: String, viewPath: String,
                              keys: Seq[String], ordCols: Seq[String])
 
-  private val defs = new java.util.concurrent.ConcurrentHashMap[String, Vector[LatestDef]]
-
-  private def keyOf(spark: SparkSession, basePath: String): String = {
-    val p = new Path(basePath)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
-  }
-
-  private def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
-
-  private val catalog = new DurableDefCatalog[LatestDef](
+  private[plans] val catalog = new DurableDefCatalog[LatestDef](
     ManifestTable.MvLatestDefPropPrefix,
-    d => Seq(enc(d.viewPath), d.keys.mkString(","), d.ordCols.mkString(",")).mkString("|"),
+    d => Seq(DurableDefCatalog.enc(d.viewPath), d.keys.mkString(","),
+      d.ordCols.mkString(",")).mkString("|"),
     (basePath, value) => try {
       val parts = value.split('|')
-      def cols(i: Int): Seq[String] =
-        if (i >= parts.length || parts(i).isEmpty) Nil else parts(i).split(',').toSeq
-      val d = LatestDef(basePath, dec(parts(0)), cols(1), cols(2))
+      val d = LatestDef(basePath, DurableDefCatalog.dec(parts(0)),
+        DurableDefCatalog.cols(parts, 1), DurableDefCatalog.cols(parts, 2))
       if (d.keys.isEmpty || d.ordCols.isEmpty) None else Some(d)
     } catch { case scala.util.control.NonFatal(_) => None },
-    (a, b) => a.viewPath == b.viewPath)
+    owner = _.basePath, viewOf = _.viewPath)
 
   /** Declare `viewPath` a maintained latest-state view of `basePath`.
     * Re-registering the same `viewPath` replaces its definition in
@@ -65,36 +53,22 @@ object LatestRegistry {
       "LatestRegistry.register: column names must not contain ',' or '|'")
     require(keys.intersect(ordCols).isEmpty,
       "LatestRegistry.register: keys and ordCols must be disjoint")
-    val d = LatestDef(basePath, viewPath, keys, ordCols)
-    defs.compute(keyOf(spark, basePath), (_, old) =>
-      Option(old).getOrElse(Vector.empty)
-        .filterNot(_.viewPath == viewPath) :+ d)
-    if (durable)
-      catalog.persist(spark, basePath, keyOf(spark, basePath), d, retainVersions)
+    catalog.register(spark, LatestDef(basePath, viewPath, keys, ordCols),
+      durable, retainVersions)
   }
 
   /** Drop every view registered for `basePath` (in-memory an EMPTY
     * SHADOW — the session really disables the rewrite rather than
     * falling through to the durable catalog). */
   def unregister(spark: SparkSession, basePath: String,
-                 durable: Boolean = false, retainVersions: Int = 2): Unit = {
-    defs.put(keyOf(spark, basePath), Vector.empty)
-    if (durable)
-      catalog.remove(spark, basePath, keyOf(spark, basePath), _ => true,
-        retainVersions)
-  }
-
-  private[plans] def lookup(spark: SparkSession, root: Path): Seq[LatestDef] = {
-    val q = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(root).toString
-    Option(defs.get(q)).getOrElse(catalog.lookup(spark, root.toString, q))
-  }
+                 durable: Boolean = false, retainVersions: Int = 2): Unit =
+    catalog.unregister(spark, basePath, None, durable, retainVersions)
 
   /** Test hook: fresh-session simulation. */
-  private[graft] def clearInMemory(): Unit = defs.clear()
+  private[graft] def clearInMemory(): Unit = catalog.clearInMemory()
 
   /** Test instrument: successful rewrites. */
-  private[graft] val rewrites = new java.util.concurrent.atomic.AtomicInteger
+  private[graft] def rewrites = catalog.rewrites
 }
 
 /** AUTOMATIC LATEST-STATE VIEW REWRITE — the query side of
@@ -149,78 +123,46 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case a: Aggregate => rewriteMaxBy(a).getOrElse(a)
     }
 
-  private case class ScanInfo(root: Path, idx: GraftFileIndex,
-                              colOf: Map[ExprId, (String, org.apache.spark.sql.types.DataType)],
-                              filters: Seq[Expression])
-
-  /** Descend from the window/aggregate child to the scan, absorbing
-    * identity Projects and deterministic Filters (validated against
-    * the registered key columns in the builders). */
-  private def walk(p: LogicalPlan, fs: Seq[Expression]): Option[ScanInfo] = p match {
-    case lr: LogicalRelation => lr.relation match {
-      case h: HadoopFsRelation => h.location match {
-        case g: GraftFileIndex if !g.isNarrowed =>
-          Some(ScanInfo(h.location.rootPaths.head, g,
-            lr.output.map(at => at.exprId -> (at.name, at.dataType)).toMap, fs))
-        case _ => None
-      }
-      case _ => None
-    }
-    case Project(projList, child) => walk(child, fs).flatMap { info =>
-      val identity = projList.forall {
-        case _: AttributeReference => true
-        case Alias(_: AttributeReference, _) => true
-        case _ => false
-      }
-      if (!identity) None
-      else {
-        val m = projList.flatMap {
-          case al @ Alias(ar: AttributeReference, _) =>
-            info.colOf.get(ar.exprId).map(al.exprId -> _)
-          case _ => None
-        }.toMap
-        Some(info.copy(colOf = info.colOf ++ m))
-      }
-    }
-    case f: Filter if f.condition.deterministic => walk(f.child, fs :+ f.condition)
-    case SubqueryAlias(_, child) => walk(child, fs)
-    case _ => None
-  }
+  /** The scan below the window/aggregate, through identity Projects
+    * only (deterministic Filters are validated against the registered
+    * key columns in the builders). */
+  private def scanOf(p: LogicalPlan): Option[ManifestScan] =
+    ManifestScan.of(p).filter(_.renamesOnly)
 
   /** Scan complete+current, view folded exactly that data with
     * exactly the registered semantics; returns the pinned view
-    * version. */
-  private def fresh(d: LatestRegistry.LatestDef, info: ScanInfo): Option[Long] = try {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val bfs = new Path(d.basePath).getFileSystem(conf)
-    val vfs = new Path(d.viewPath).getFileSystem(conf)
-    for {
-      cur <- ManifestTable.versions(bfs, d.basePath).lastOption
-      if info.idx.relDirs.toSet == ManifestTable.dataDirs(spark, d.basePath, cur)
-      vv <- ManifestTable.versions(vfs, d.viewPath).lastOption
-      props = ManifestTable.readPropsAt(spark, d.viewPath, vv)
-      state <- props.get(IncrementalLatest.BaseVersionProp)
-      if props.get(IncrementalLatest.KeysProp).contains(d.keys.mkString(","))
-      if props.get(IncrementalLatest.OrdProp).contains(d.ordCols.mkString(","))
-      if ManifestTable.sameDataEntries(spark, d.basePath, state.toLong, cur)
-    } yield vv
-  } catch { case scala.util.control.NonFatal(_) => None }
+    * version and its props. */
+  private def fresh(d: LatestRegistry.LatestDef,
+                    scan: ManifestScan): Option[(Long, Map[String, String])] =
+    ManifestScan.fresh(spark, d.viewPath,
+        Seq((d.basePath, scan, IncrementalLatest.BaseVersionProp))) { props =>
+      props.get(IncrementalLatest.KeysProp).contains(d.keys.mkString(",")) &&
+        props.get(IncrementalLatest.OrdProp).contains(d.ordCols.mkString(","))
+    }
 
-  private def physOf(info: ScanInfo, e: Expression): Option[String] = e match {
-    case ar: AttributeReference => info.colOf.get(ar.exprId).map(_._1)
-    case _ => None
+  /** The view pinned at `viewVersion`, and the translation of a
+    * scan-level expression onto it: every reference maps onto the
+    * view's same-named, same-typed column. */
+  private def onView(d: LatestRegistry.LatestDef, scan: ManifestScan, viewVersion: Long)
+      : (LogicalPlan, Expression => Option[Expression]) = {
+    val viewPlan = IncrementalLatest.readAt(spark, d.viewPath, viewVersion)
+      .queryExecution.analyzed
+    (viewPlan, e => ManifestScan.rebind(e)(ar =>
+      scan.colOf.get(ar.exprId).flatMap { case (n, dt) =>
+        viewPlan.output.find(_.name == n).filter(_.dataType == dt)
+      }))
   }
 
   /** The window's partition/order spec matches the registered def:
     * partition attrs are exactly the key set; order is each ordCol
     * DESCENDING NULLS LAST, in registration order. */
-  private def specMatches(d: LatestRegistry.LatestDef, info: ScanInfo,
+  private def specMatches(d: LatestRegistry.LatestDef, scan: ManifestScan,
                           partitionSpec: Seq[Expression],
                           orderSpec: Seq[SortOrder]): Boolean = {
-    val partCols = partitionSpec.map(physOf(info, _))
+    val partCols = partitionSpec.map(scan.physOf)
     val ordCols = orderSpec.map {
       case SortOrder(ar: AttributeReference, Descending, NullsLast, _) =>
-        physOf(info, ar)
+        scan.physOf(ar)
       case _ => None
     }
     partCols.forall(_.isDefined) && ordCols.forall(_.isDefined) &&
@@ -234,13 +176,13 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val w = f.child.asInstanceOf[Window]
     for {
       (rnAttr, ps, os) <- rowNumberOf(w)
-      (below, info) <- walkThroughLimit(w.child, ps, os)
-      d <- LatestRegistry.lookup(spark, info.root).find(dd =>
-        specMatches(dd, info, ps, os) &&
-          info.filters.forall(keyOnly(dd, info, _)))
+      scan <- walkThroughLimit(w.child, ps, os)
+      d <- LatestRegistry.catalog.lookup(spark, scan.root).find(dd =>
+        specMatches(dd, scan, ps, os) &&
+          scan.filters.forall(keyOnly(dd, scan, _)))
       above <- aboveConjuncts(f.condition, rnAttr)
-      vv <- fresh(d, info)
-      plan <- buildWindow(f, w, rnAttr, d, info, above, vv)
+      (vv, _) <- fresh(d, scan)
+      plan <- buildWindow(f, rnAttr, d, scan, above, vv)
     } yield {
       LatestRegistry.rewrites.incrementAndGet()
       logInfo(s"graft latest-rewrite: answered a latest-per-key window over " +
@@ -270,7 +212,7 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * the window's and its limit keeps rank 1 (a foreign spec could
     * drop the row the window ranks first — decline). */
   private def walkThroughLimit(p: LogicalPlan, ps: Seq[Expression],
-                               os: Seq[SortOrder]): Option[(LogicalPlan, ScanInfo)] = {
+                               os: Seq[SortOrder]): Option[ManifestScan] = {
     val below = p match {
       case wgl: WindowGroupLimit
           if wgl.limit >= 1 &&
@@ -282,7 +224,7 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _: WindowGroupLimit => return None
       case other => other
     }
-    walk(below, Nil).map(below -> _)
+    scanOf(below)
   }
 
   /** Split the filter into the rank-1 conjunct (required), dropped
@@ -316,35 +258,18 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     else Some(rest)
   }
 
-  private def keyOnly(d: LatestRegistry.LatestDef, info: ScanInfo,
+  private def keyOnly(d: LatestRegistry.LatestDef, scan: ManifestScan,
                       e: Expression): Boolean =
-    e.deterministic && e.references.nonEmpty && e.references.forall(ar =>
-      info.colOf.get(ar.exprId).exists(p => d.keys.contains(p._1)))
+    e.deterministic && e.references.nonEmpty &&
+      e.references.forall(scan.physOf(_).exists(d.keys.contains))
 
-  private def buildWindow(f: Filter, w: Window, rnAttr: Attribute,
-                          d: LatestRegistry.LatestDef, info: ScanInfo,
+  private def buildWindow(f: Filter, rnAttr: Attribute,
+                          d: LatestRegistry.LatestDef, scan: ManifestScan,
                           above: Seq[Expression], viewVersion: Long): Option[LogicalPlan] = {
-    val viewPlan = IncrementalLatest.readAt(spark, d.viewPath, viewVersion)
-      .queryExecution.analyzed
-    def viewAttr(name: String): Option[Attribute] = viewPlan.output.find(_.name == name)
-    // every scan-level reference maps onto the view's same-named,
-    // same-typed column
-    def translate(e: Expression): Option[Expression] = {
-      var ok = true
-      val t = e.transform {
-        case ar: AttributeReference =>
-          info.colOf.get(ar.exprId).flatMap { case (n, dt) =>
-            viewAttr(n).filter(_.dataType == dt)
-          } match {
-            case Some(va) => va
-            case None => ok = false; ar
-          }
-      }
-      if (ok) Some(t) else None
-    }
+    val (viewPlan, translate) = onView(d, scan, viewVersion)
     // below-window KEY filters and residual above-window filters both
     // re-apply on the view verbatim
-    val conds = (info.filters ++ above).map(translate)
+    val conds = (scan.filters ++ above).map(translate)
     if (conds.exists(_.isEmpty)) return None
     val filtered = conds.flatten.foldLeft(viewPlan)((p, c) => Filter(c, p))
     // the replacement reproduces the Filter node's exact output:
@@ -352,11 +277,7 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val projList: Seq[Option[NamedExpression]] = f.output.map { a =>
       if (a.exprId == rnAttr.exprId)
         Some(Alias(Literal(1, IntegerType), a.name)(exprId = a.exprId))
-      else
-        info.colOf.get(a.exprId).flatMap { case (n, dt) =>
-          viewAttr(n).filter(_.dataType == dt)
-            .map(va => Alias(va, a.name)(exprId = a.exprId))
-        }
+      else translate(a).map(va => Alias(va, a.name)(exprId = a.exprId))
     }
     if (projList.exists(_.isEmpty)) None
     else Some(Project(projList.flatten, filtered))
@@ -371,22 +292,21 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case _ => false
     })) return None
     for {
-      info <- walk(a.child, Nil)
-      d <- LatestRegistry.lookup(spark, info.root).find { dd =>
-        val groups = a.groupingExpressions.map(physOf(info, _))
+      scan <- scanOf(a.child)
+      d <- LatestRegistry.catalog.lookup(spark, scan.root).find { dd =>
+        val groups = a.groupingExpressions.map(scan.physOf)
         groups.forall(_.isDefined) && groups.flatten.toSet == dd.keys.toSet &&
-          info.filters.forall(keyOnly(dd, info, _))
+          scan.filters.forall(keyOnly(dd, scan, _))
       }
-      vv <- fresh(d, info)
+      (vv, props) <- fresh(d, scan)
       // max_by skips null-ordered rows while the maintained view ranks
       // them last — the two agree only when no view row carries a null
       // ord, which is exactly what refresh's validated-at-write
       // certificate attests. An uncertified view (null ords present,
       // or written before the certificate existed) declines to the
       // scan; the window form is null-safe and rewrites regardless.
-      if ManifestTable.readPropsAt(spark, d.viewPath, vv)
-        .get(IncrementalLatest.OrdNonNullProp).contains("true")
-      plan <- buildMaxBy(a, d, info, vv)
+      if props.get(IncrementalLatest.OrdNonNullProp).contains("true")
+      plan <- buildMaxBy(a, d, scan, vv)
     } yield {
       LatestRegistry.rewrites.incrementAndGet()
       logInfo(s"graft latest-rewrite: answered a max_by aggregate over " +
@@ -398,35 +318,19 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
   /** The aggregate's order argument is the registered comparator: the
     * single ord column, or a struct of the ord columns in exact
     * registration order. */
-  private def ordMatches(d: LatestRegistry.LatestDef, info: ScanInfo,
+  private def ordMatches(d: LatestRegistry.LatestDef, scan: ManifestScan,
                          ord: Expression): Boolean = ord match {
     case ar: AttributeReference =>
-      d.ordCols.size == 1 && physOf(info, ar).contains(d.ordCols.head)
+      d.ordCols.size == 1 && scan.physOf(ar).contains(d.ordCols.head)
     case cns: CreateNamedStruct =>
-      val vals = cns.valExprs.map(physOf(info, _))
+      val vals = cns.valExprs.map(scan.physOf)
       vals.forall(_.isDefined) && vals.flatten == d.ordCols
     case _ => false
   }
 
   private def buildMaxBy(a: Aggregate, d: LatestRegistry.LatestDef,
-                         info: ScanInfo, viewVersion: Long): Option[LogicalPlan] = {
-    val viewPlan = IncrementalLatest.readAt(spark, d.viewPath, viewVersion)
-      .queryExecution.analyzed
-    def viewAttr(name: String): Option[Attribute] = viewPlan.output.find(_.name == name)
-    def translate(e: Expression): Option[Expression] = {
-      if (!e.deterministic) return None
-      var ok = true
-      val t = e.transform {
-        case ar: AttributeReference =>
-          info.colOf.get(ar.exprId).flatMap { case (n, dt) =>
-            viewAttr(n).filter(_.dataType == dt)
-          } match {
-            case Some(va) => va
-            case None => ok = false; ar
-          }
-      }
-      if (ok) Some(t) else None
-    }
+                         scan: ManifestScan, viewVersion: Long): Option[LogicalPlan] = {
+    val (viewPlan, translate) = onView(d, scan, viewVersion)
     val outs: Seq[Option[NamedExpression]] = a.aggregateExpressions.map { ne =>
       val (core, name, id) = ne match {
         case al @ Alias(c, n) => (c, n, al.exprId)
@@ -439,13 +343,13 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // max_by(value, registeredOrd): the view row IS the argmax
         // row, so the answer is `value` evaluated on it
         case AggregateExpression(MaxBy(value, ord), _, false, None, _)
-            if ordMatches(d, info, ord) =>
+            if value.deterministic && ordMatches(d, scan, ord) =>
           translate(value)
         // max(leadingOrdCol): the argmax row's own leading order
         // value (the latest row maximizes the tuple lexicographically,
         // so its first component is the column max)
         case AggregateExpression(Max(ar: AttributeReference), _, false, None, _)
-            if physOf(info, ar).contains(d.ordCols.head) =>
+            if scan.physOf(ar).contains(d.ordCols.head) =>
           translate(ar)
         case _ => None
       }
@@ -453,7 +357,7 @@ case class LatestRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         .map(e => Alias(e, name)(exprId = id))
     }
     if (outs.exists(_.isEmpty)) return None
-    val conds = info.filters.map(translate)
+    val conds = scan.filters.map(translate)
     if (conds.exists(_.isEmpty)) return None
     val filtered = conds.flatten.foldLeft(viewPlan)((p, c) => Filter(c, p))
     Some(Project(outs.flatten, filtered))

@@ -1,14 +1,12 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-import graft.ops.{GraftFileIndex, IncrementalJoin, ManifestTable}
+import graft.ops.{IncrementalJoin, ManifestTable}
 
 /** JOIN-VIEW REGISTRY — which [[IncrementalJoin]]-maintained
   * enrichment views stand for which `fact ⋈ dim` pairs. Registration
@@ -21,54 +19,33 @@ object MvJoinRegistry {
   final case class MvJoinDef(factPath: String, dimPath: String, viewPath: String,
                              joinKeys: Seq[String], joinType: String)
 
-  private val defs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Vector[MvJoinDef]]
-
-  private def keyOf(spark: SparkSession, p: String): String = {
-    val path = new Path(p)
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(path).toString
-  }
-
-  private def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
-
-  /** Shared catalog mechanics ([[DurableDefCatalog]]): `mv.join.NNNN`
-    * props on the FACT manifest hold the URL-encoded dim and view
-    * paths, the ','-joined key list (ORDER-STABLE — the encoded order
-    * is the registered order) and the join type; a 3-part value is an
-    * r17-era single-key inner def and decodes as such, so existing
-    * catalogs keep working. Corrupt props skip on lookup, sweep on
-    * durable unregister. */
-  private val catalog = new DurableDefCatalog[MvJoinDef](
+  /** `mv.join.NNNN` props on the FACT manifest hold the URL-encoded
+    * dim and view paths, the ','-joined key list (ORDER-STABLE — the
+    * encoded order is the registered order) and the join type; a
+    * 3-part value is an r17-era single-key inner def and decodes as
+    * such, so existing catalogs keep working. Corrupt props skip on
+    * lookup, sweep on durable unregister. Lookups and unregisters are
+    * scoped to the dim. */
+  private[plans] val catalog = new DurableDefCatalog[MvJoinDef](
     graft.ops.ManifestTable.MvJoinDefPropPrefix,
-    d => Seq(enc(d.dimPath), enc(d.viewPath), d.joinKeys.mkString(","),
-      d.joinType).mkString("|"),
+    d => Seq(DurableDefCatalog.enc(d.dimPath), DurableDefCatalog.enc(d.viewPath),
+      d.joinKeys.mkString(","), d.joinType).mkString("|"),
     (factPath, value) => try {
       val parts = value.split('|')
       val keys = parts(2).split(',').toSeq.filter(_.nonEmpty)
       val jt = if (parts.length >= 4) parts(3) else "inner"
       if (keys.isEmpty || !Set("inner", "left_outer")(jt)) None
-      else Some(MvJoinDef(factPath, dec(parts(0)), dec(parts(1)), keys, jt))
+      else Some(MvJoinDef(factPath, DurableDefCatalog.dec(parts(0)),
+        DurableDefCatalog.dec(parts(1)), keys, jt))
     } catch { case scala.util.control.NonFatal(_) => None },
-    (a, b) => a.viewPath == b.viewPath)
-
-  /** Single-key inner registration — the original surface. */
-  def register(spark: SparkSession, factPath: String, dimPath: String,
-               viewPath: String, joinKey: String): Unit =
-    register(spark, factPath, dimPath, viewPath, Seq(joinKey))
-
-  /** Single-key inner registration, durable. */
-  def register(spark: SparkSession, factPath: String, dimPath: String,
-               viewPath: String, joinKey: String, durable: Boolean): Unit =
-    register(spark, factPath, dimPath, viewPath, Seq(joinKey), durable = durable)
+    owner = _.factPath, viewOf = _.viewPath, scope = d => Some(d.dimPath))
 
   /** A pair may carry several views (one per key list / join type);
     * the rewrite tries them in registration order. Re-registering the
     * same `viewPath` replaces its definition in place (durably too —
     * it keeps its prop slot). `durable = true` commits the definition
     * as a `mv.join.NNNN` prop on the FACT table's manifest, so a
-    * fresh session's [[lookup]] rediscovers it with no in-memory
+    * fresh session's lookup rediscovers it with no in-memory
     * state; `retainVersions` is that commit's retention horizon
     * (pass the table's own setting — addConstraint's contract).
     * Registration ORDER vs refresh does not matter: freshness
@@ -81,13 +58,8 @@ object MvJoinRegistry {
     require(joinKeys.nonEmpty, "MvJoinRegistry.register: no join keys")
     require(joinKeys.forall(k => !k.contains(',') && !k.contains('|')),
       "MvJoinRegistry.register: join keys must not contain ',' or '|'")
-    val jt = IncrementalJoin.normalizeJoinType(joinType)
-    val d = MvJoinDef(factPath, dimPath, viewPath, joinKeys, jt)
-    defs.compute((keyOf(spark, factPath), keyOf(spark, dimPath)), (_, old) =>
-      Option(old).getOrElse(Vector.empty)
-        .filterNot(_.viewPath == viewPath) :+ d)
-    if (durable)
-      catalog.persist(spark, factPath, keyOf(spark, factPath), d, retainVersions)
+    catalog.register(spark, MvJoinDef(factPath, dimPath, viewPath, joinKeys,
+      IncrementalJoin.normalizeJoinType(joinType)), durable, retainVersions)
   }
 
   /** Drop every view registered for the pair. In-memory the pair
@@ -97,32 +69,14 @@ object MvJoinRegistry {
     * entries for good (other dims' entries stay; corrupt ones sweep). */
   def unregister(spark: SparkSession, factPath: String, dimPath: String,
                  durable: Boolean = false,
-                 retainVersions: Int = 2): Unit = {
-    val dimQ = keyOf(spark, dimPath)
-    defs.put((keyOf(spark, factPath), dimQ), Vector.empty)
-    if (durable)
-      catalog.remove(spark, factPath, keyOf(spark, factPath),
-        d => keyOf(spark, d.dimPath) == dimQ, retainVersions)
-  }
+                 retainVersions: Int = 2): Unit =
+    catalog.unregister(spark, factPath, Some(dimPath), durable, retainVersions)
 
-  /** In-memory defs win (including the empty unregister shadow); a
-    * true miss falls through to the fact manifest's `mv.join.*`
-    * catalog (TTL'd version probe, per-version memo), filtered to
-    * the dim actually joined. */
-  private[plans] def lookup(spark: SparkSession, factRoot: Path,
-                            dimRoot: Path): Seq[MvJoinDef] = {
-    val factQ = keyOf(spark, factRoot.toString)
-    val dimQ = keyOf(spark, dimRoot.toString)
-    Option(defs.get((factQ, dimQ))).getOrElse(
-      catalog.lookup(spark, factRoot.toString, factQ)
-        .filter(d => keyOf(spark, d.dimPath) == dimQ))
-  }
-
-  /** Test hook: fresh-session simulation ([[MvRegistry.clearInMemory]]). */
-  private[graft] def clearInMemory(): Unit = defs.clear()
+  /** Test hook: fresh-session simulation ([[DurableDefCatalog.clearInMemory]]). */
+  private[graft] def clearInMemory(): Unit = catalog.clearInMemory()
 
   /** Test instrument: successful rewrites. */
-  private[graft] val rewrites = new java.util.concurrent.atomic.AtomicInteger
+  private[graft] def rewrites = catalog.rewrites
 }
 
 /** AUTOMATIC JOIN-VIEW REWRITE — the query side of
@@ -187,10 +141,6 @@ case class MvJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
         rewrite(j, cond).getOrElse(j)
     }
 
-  private case class Side(root: Path, idx: GraftFileIndex,
-                          colOf: Map[ExprId, (String, org.apache.spark.sql.types.DataType)],
-                          filters: Seq[Expression])
-
   private def rewrite(j: Join, cond: Expression): Option[LogicalPlan] = for {
     // every conjunct an attr=attr equality, oriented (left, right)
     pairs <- {
@@ -206,17 +156,17 @@ case class MvJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
       if (oriented.exists(_.isEmpty)) None else Some(oriented.flatten)
     }
     if pairs.nonEmpty
-    left <- walk(j.left, Nil)
-    right <- walk(j.right, Nil)
+    left <- ManifestScan.of(j.left)
+    right <- ManifestScan.of(j.right)
     plan <- {
       // several views may stand for one pair (one per key list / join
       // type) and either side may be the registered fact — try each
       // candidate in registration order, first match wins. factLeft
       // tracks the orientation for the outer-join adjudication.
       val candidates =
-        MvJoinRegistry.lookup(spark, left.root, right.root)
+        MvJoinRegistry.catalog.lookup(spark, left.root, Some(right.root))
           .map(m => (m, left, right, pairs, true)) ++
-        MvJoinRegistry.lookup(spark, right.root, left.root)
+        MvJoinRegistry.catalog.lookup(spark, right.root, Some(left.root))
           .map(m => (m, right, left, pairs.map(_.swap), false))
       candidates.view.flatMap { case (mv, fact, dim, kp, factLeft) =>
         // both outer forms are handled iff they PRESERVE THE FACT —
@@ -258,7 +208,7 @@ case class MvJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
           .exists((dim.colOf.values.map(_._1).toSet -- mv.joinKeys))
         if (!keyed || !typeOk || !filtersOk || !unambiguous) None
         else for {
-          viewVersion <- fresh(mv, fact, dim)
+          (viewVersion, _) <- fresh(mv, fact, dim)
           p <- build(j, mv, fact, dim, leftOuter, viewVersion)
         } yield {
           MvJoinRegistry.rewrites.incrementAndGet()
@@ -271,69 +221,31 @@ case class MvJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     }
   } yield plan
 
-  private def walk(p: LogicalPlan, fs: Seq[Expression]): Option[Side] = p match {
-    case lr: LogicalRelation => lr.relation match {
-      case h: HadoopFsRelation => h.location match {
-        case g: GraftFileIndex if !g.isNarrowed =>
-          Some(Side(h.location.rootPaths.head, g,
-            lr.output.map(at => at.exprId -> (at.name, at.dataType)).toMap, fs))
-        case _ => None
-      }
-      case _ => None
-    }
-    case Project(projList, child) => walk(child, fs).map { s =>
-      s.copy(colOf = s.colOf ++ projList.flatMap {
-        case al @ Alias(ar: AttributeReference, _) =>
-          s.colOf.get(ar.exprId).map(al.exprId -> _)
-        case _ => None
-      }.toMap)
-    }
-    case f: Filter if f.condition.deterministic => walk(f.child, fs :+ f.condition)
-    case SubqueryAlias(_, child) => walk(child, fs)
-    case _ => None
-  }
-
   /** Both scans complete+current, view folded exactly that DATA and
     * (when recorded) with exactly the registered SEMANTICS; returns
-    * the pinned view version. Metadata-only commits on either base
-    * (constraints, the `mv.join.*` catalog write itself, sort order)
-    * bridge through data-entry identity
-    * ([[ManifestTable.sameDataEntries]]) — so durable registration
-    * order vs refresh is irrelevant. */
-  private def fresh(mv: MvJoinRegistry.MvJoinDef, fact: Side,
-                    dim: Side): Option[Long] = try {
-    val hc = spark.sparkContext.hadoopConfiguration
-    val ffs = new Path(mv.factPath).getFileSystem(hc)
-    val dfs = new Path(mv.dimPath).getFileSystem(hc)
-    val vfs = new Path(mv.viewPath).getFileSystem(hc)
-    for {
-      fCur <- ManifestTable.versions(ffs, mv.factPath).lastOption
-      dCur <- ManifestTable.versions(dfs, mv.dimPath).lastOption
-      if fact.idx.relDirs.toSet == ManifestTable.dataDirs(spark, mv.factPath, fCur)
-      if dim.idx.relDirs.toSet == ManifestTable.dataDirs(spark, mv.dimPath, dCur)
-      vv <- ManifestTable.versions(vfs, mv.viewPath).lastOption
-      props = ManifestTable.readPropsAt(spark, mv.viewPath, vv)
-      fState <- props.get(IncrementalJoin.FactVersionProp)
-      dState <- props.get(IncrementalJoin.DimVersionProp)
+    * the pinned view version and its props. */
+  private def fresh(mv: MvJoinRegistry.MvJoinDef, fact: ManifestScan,
+                    dim: ManifestScan): Option[(Long, Map[String, String])] =
+    ManifestScan.fresh(spark, mv.viewPath, Seq(
+        (mv.factPath, fact, IncrementalJoin.FactVersionProp),
+        (mv.dimPath, dim, IncrementalJoin.DimVersionProp))) { props =>
       // Pre-r18 views (built inner/single-key) carry neither prop, so
       // absence is acceptable ONLY for that default shape; a
       // non-default registration (left_outer or composite key) must
       // find the props stamped AND matching, else a mis-registered
       // legacy view would pass freshness and serve the wrong rows.
-      if props.get(IncrementalJoin.JoinTypeProp)
-        .fold(mv.joinType == "inner")(_ == mv.joinType)
-      if props.get(IncrementalJoin.JoinKeysProp)
-        .fold(mv.joinKeys.size == 1)(_ == mv.joinKeys.mkString(","))
-      if ManifestTable.sameDataEntries(spark, mv.factPath, fState.toLong, fCur)
-      if ManifestTable.sameDataEntries(spark, mv.dimPath, dState.toLong, dCur)
-    } yield vv
-  } catch { case scala.util.control.NonFatal(_) => None }
+      props.get(IncrementalJoin.JoinTypeProp)
+        .fold(mv.joinType == "inner")(_ == mv.joinType) &&
+        props.get(IncrementalJoin.JoinKeysProp)
+          .fold(mv.joinKeys.size == 1)(_ == mv.joinKeys.mkString(","))
+    }
 
   /** Filter(view) → Project back to the join's output names/exprIds.
     * Under INNER both key attrs map onto the view's single key
     * column; under LEFT OUTER the dim-side key attrs map onto the
     * view's null-extended [[IncrementalJoin.dimKeyCol]] copies. */
-  private def build(j: Join, mv: MvJoinRegistry.MvJoinDef, fact: Side, dim: Side,
+  private def build(j: Join, mv: MvJoinRegistry.MvJoinDef, fact: ManifestScan,
+                    dim: ManifestScan,
                     leftOuter: Boolean, viewVersion: Long): Option[LogicalPlan] = {
     val viewPlan = ManifestTable.readVersion(spark, mv.viewPath, viewVersion)
       .queryExecution.analyzed
@@ -353,16 +265,7 @@ case class MvJoinRewriteRule(spark: SparkSession) extends Rule[LogicalPlan]
     // under left_outer the admitted dim-side conjuncts are the
     // inferred key-isnotnull no-ops — never re-applied on the view
     val toTranslate = if (leftOuter) fact.filters else fact.filters ++ dim.filters
-    val translated = toTranslate.map { cond =>
-      var ok = true
-      val t = cond.transform {
-        case ar: AttributeReference => target(ar.exprId) match {
-          case Some(va) => va
-          case None => ok = false; ar
-        }
-      }
-      if (ok) Some(t) else None
-    }
+    val translated = toTranslate.map(ManifestScan.rebind(_)(ar => target(ar.exprId)))
     if (translated.exists(_.isEmpty)) return None
     val filtered = translated.flatten.foldLeft(viewPlan)((p, c) => Filter(c, p))
 

@@ -1,16 +1,14 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{ByteType, DataType, DecimalType, DoubleType,
   IntegerType, LongType, ShortType}
 
-import graft.ops.{GraftFileIndex, IncrementalAgg, ManifestTable}
+import graft.ops.{IncrementalAgg, ManifestTable}
 
 /** MATERIALIZED-VIEW REGISTRY — which [[IncrementalAgg]]-maintained
   * views stand for which base tables. Registration is the explicit
@@ -25,7 +23,7 @@ import graft.ops.{GraftFileIndex, IncrementalAgg, ManifestTable}
   * DURABILITY: `register(durable = true)` additionally persists the
   * definition as a `mv.agg.NNNN` prop ON THE BASE TABLE'S MANIFEST —
   * the catalog entry a warehouse would keep for QUERY_REWRITE. A
-  * fresh session's [[lookup]] falls through to the manifest on an
+  * fresh session's lookup falls through to the manifest on an
   * in-memory miss (memoized per base version), so the rewrite
   * survives a restart with zero re-registration — without this, a
   * restarted pipeline gets correct results 1000× slower and nobody
@@ -38,34 +36,21 @@ object MvRegistry {
                          groupCols: Seq[String], sumCols: Seq[String],
                          minMaxCols: Seq[String] = Nil)
 
-  private val defs = new java.util.concurrent.ConcurrentHashMap[String, Vector[MvDef]]
-
-  private def keyOf(spark: SparkSession, basePath: String): String = {
-    val p = new Path(basePath)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
-  }
-
-  private def enc(s: String): String =
-    java.net.URLEncoder.encode(s, "UTF-8")
-  private def dec(s: String): String =
-    java.net.URLDecoder.decode(s, "UTF-8")
-
-  /** The shared catalog mechanics ([[DurableDefCatalog]]): `mv.agg.
-    * NNNN` prop values are the URL-encoded view path + the three
-    * column lists (identifiers — ',' and '|' refused at register);
-    * a corrupt prop decodes to None (skipped on lookup, swept on
-    * durable unregister). */
-  private val catalog = new DurableDefCatalog[MvDef](
+  /** `mv.agg.NNNN` prop values are the URL-encoded view path + the
+    * three column lists (identifiers — ',' and '|' refused at
+    * register); a corrupt prop decodes to None (skipped on lookup,
+    * swept on durable unregister). */
+  private[plans] val catalog = new DurableDefCatalog[MvDef](
     ManifestTable.MvAggDefPropPrefix,
-    d => Seq(enc(d.aggPath), d.groupCols.mkString(","), d.sumCols.mkString(","),
-      d.minMaxCols.mkString(",")).mkString("|"),
+    d => Seq(DurableDefCatalog.enc(d.aggPath), d.groupCols.mkString(","),
+      d.sumCols.mkString(","), d.minMaxCols.mkString(",")).mkString("|"),
     (basePath, value) => try {
       val parts = value.split('|')
-      def cols(i: Int): Seq[String] =
-        if (i >= parts.length || parts(i).isEmpty) Nil else parts(i).split(',').toSeq
-      Some(MvDef(basePath, dec(parts(0)), cols(1), cols(2), cols(3)))
+      Some(MvDef(basePath, DurableDefCatalog.dec(parts(0)),
+        DurableDefCatalog.cols(parts, 1), DurableDefCatalog.cols(parts, 2),
+        DurableDefCatalog.cols(parts, 3)))
     } catch { case scala.util.control.NonFatal(_) => None },
-    (a, b) => a.aggPath == b.aggPath)
+    owner = _.basePath, viewOf = _.aggPath)
 
   /** Declare `aggPath` a maintained aggregate view of `basePath`.
     * A base may carry SEVERAL views (different groupings/measures);
@@ -92,12 +77,8 @@ object MvRegistry {
     require((groupCols ++ sumCols ++ minMaxCols)
         .forall(c => !c.contains(',') && !c.contains('|')),
       "MvRegistry.register: column names must not contain ',' or '|'")
-    val d = MvDef(basePath, aggPath, groupCols, sumCols, minMaxCols)
-    defs.compute(keyOf(spark, basePath), (_, old) =>
-      Option(old).getOrElse(Vector.empty)
-        .filterNot(_.aggPath == aggPath) :+ d)
-    if (durable)
-      catalog.persist(spark, basePath, keyOf(spark, basePath), d, retainVersions)
+    catalog.register(spark, MvDef(basePath, aggPath, groupCols, sumCols, minMaxCols),
+      durable, retainVersions)
   }
 
   /** Drop every view registered for `basePath`. In-memory the entry
@@ -108,31 +89,14 @@ object MvRegistry {
     * props for good (and sweeps any corrupt ones). */
   def unregister(spark: SparkSession, basePath: String,
                  durable: Boolean = false,
-                 retainVersions: Int = 2): Unit = {
-    defs.put(keyOf(spark, basePath), Vector.empty)
-    if (durable)
-      catalog.remove(spark, basePath, keyOf(spark, basePath), _ => true,
-        retainVersions)
-  }
+                 retainVersions: Int = 2): Unit =
+    catalog.unregister(spark, basePath, None, durable, retainVersions)
 
-  /** In-memory defs win (session-local overrides, INCLUDING the
-    * empty shadow an unregister leaves); a true miss falls through to
-    * the MANIFEST catalog — TTL'd latest-version probe, props read
-    * memoized per (base, version). Prop-key order (zero-padded
-    * slots) IS the registration try order. */
-  private[plans] def lookup(spark: SparkSession, root: Path): Seq[MvDef] = {
-    val q = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(root).toString
-    Option(defs.get(q)).getOrElse(catalog.lookup(spark, root.toString, q))
-  }
-
-  /** Test hook: a fresh-session simulation — the in-memory registry
-    * (shadows included) empties, so every subsequent lookup exercises
-    * the durable path. */
-  private[graft] def clearInMemory(): Unit = defs.clear()
+  /** Test hook: fresh-session simulation ([[DurableDefCatalog.clearInMemory]]). */
+  private[graft] def clearInMemory(): Unit = catalog.clearInMemory()
 
   /** Test instrument: successful rewrites. */
-  private[graft] val rewrites = new java.util.concurrent.atomic.AtomicInteger
+  private[graft] def rewrites = catalog.rewrites
 }
 
 /** AUTOMATIC MATERIALIZED-VIEW REWRITE — the query side of
@@ -201,26 +165,15 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       case a: Aggregate => rewrite(a).getOrElse(a)
     }
 
-  /** What the walk below the Aggregate found: the scan's index+root,
-    * exprId → physical column name/type, COMPUTED alias expressions
-    * resolved down to scan-level attrs (the optimizer's
-    * PullOutGroupingExpressions moves complex groupings into a
-    * Project below the Aggregate as `_groupingexpression#N` — the
-    * derived map lets [[build]] expand those back), and the filters
-    * to re-apply on the view. */
-  private case class ScanInfo(root: Path, idx: GraftFileIndex,
-                              colOf: Map[ExprId, (String, org.apache.spark.sql.types.DataType)],
-                              derived: Map[ExprId, Expression],
-                              filters: Seq[Expression])
-
   private def rewrite(a: Aggregate): Option[LogicalPlan] =
-    walk(a.child, Nil).flatMap { info =>
+    ManifestScan.of(a.child).flatMap { scan =>
       // several views may stand for one base — first match in
       // registration order wins (register most-specific first)
-      MvRegistry.lookup(spark, info.root).view.flatMap { mv =>
+      MvRegistry.catalog.lookup(spark, scan.root).view.flatMap { mv =>
         for {
-          viewVersion <- fresh(mv, info)
-          plan <- build(a, mv, info, viewVersion)
+          (viewVersion, _) <- ManifestScan.fresh(spark, mv.aggPath,
+            Seq((mv.basePath, scan, IncrementalAgg.BaseVersionProp)))(_ => true)
+          plan <- build(a, mv, scan, viewVersion)
         } yield {
           MvRegistry.rewrites.incrementAndGet()
           logInfo(s"graft mv-rewrite: answered a grouped aggregate over " +
@@ -230,85 +183,14 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       }.headOption
     }
 
-  /** Descend to the scan, absorbing identity Projects and deterministic
-    * Filters (kept for later translation — their references are
-    * validated against the group columns in [[build]]). */
-  private def walk(p: LogicalPlan, fs: Seq[Expression]): Option[ScanInfo] = p match {
-    case lr: LogicalRelation => lr.relation match {
-      case h: HadoopFsRelation => h.location match {
-        case g: GraftFileIndex if !g.isNarrowed =>
-          Some(ScanInfo(lr.relation.asInstanceOf[HadoopFsRelation].location
-            .rootPaths.head, g,
-            lr.output.map(at => at.exprId -> (at.name, at.dataType)).toMap,
-            Map.empty, fs))
-        case _ => None
-      }
-      case _ => None
-    }
-    case Project(projList, child) => walk(child, fs).flatMap { info =>
-      val m = projList.flatMap {
-        case al @ Alias(ar: AttributeReference, _) =>
-          info.colOf.get(ar.exprId).map(al.exprId -> _)
-        case _ => None
-      }.toMap
-      // COMPUTED aliases (incl. the optimizer's _groupingexpression#N
-      // pull-outs) record their defining expression resolved down to
-      // scan-level attrs, so translate() can expand them
-      val d = projList.flatMap {
-        case al @ Alias(e, _)
-            if !e.isInstanceOf[AttributeReference] && e.deterministic =>
-          Some(al.exprId -> e.transform {
-            case ar: AttributeReference => info.derived.getOrElse(ar.exprId, ar)
-          })
-        case _ => None
-      }.toMap
-      // filters collected ABOVE this project reference the outer ids;
-      // remap is implicit because colOf carries every live id
-      Some(info.copy(colOf = info.colOf ++ m, derived = info.derived ++ d))
-    }
-    case f: Filter if f.condition.deterministic => walk(f.child, fs :+ f.condition)
-    case SubqueryAlias(_, child) => walk(child, fs)
-    case _ => None
-  }
-
-  /** The scan is the complete current base AND the view has folded
-    * exactly that data. Returns the VIEW version whose committed
-    * `agg.base_version` was verified — [[build]] reads exactly that
-    * version, so a refresh racing the planner can neither serve an
-    * unverified snapshot nor tear between check and read. Freshness
-    * BRIDGES metadata-only commits ([[ManifestTable.sameDataEntries]]):
-    * a constraint/catalog/sort-order commit after the refresh bumps
-    * the base version without touching a data entry, and must not
-    * disarm the rewrite — in particular, `register(durable = true)`
-    * is itself such a commit, so registration order vs refresh is
-    * irrelevant. Driver-side metadata only. */
-  private def fresh(mv: MvRegistry.MvDef, info: ScanInfo): Option[Long] = try {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val bfs = new Path(mv.basePath).getFileSystem(conf)
-    val vfs = new Path(mv.aggPath).getFileSystem(conf)
-    for {
-      cur <- ManifestTable.versions(bfs, mv.basePath).lastOption
-      if info.idx.relDirs.toSet == ManifestTable.dataDirs(spark, mv.basePath, cur)
-      vv <- ManifestTable.versions(vfs, mv.aggPath).lastOption
-      state <- ManifestTable.readPropsAt(spark, mv.aggPath, vv)
-        .get(IncrementalAgg.BaseVersionProp)
-      if ManifestTable.sameDataEntries(spark, mv.basePath, state.toLong, cur)
-    } yield vv
-  } catch { case scala.util.control.NonFatal(_) => None }
-
   /** Construct the replacement: Filter(view) → Aggregate → Project
     * aliasing back to the original output names and exprIds. Any
     * unmappable piece answers None (back off, never fail). */
   private def build(a: Aggregate, mv: MvRegistry.MvDef,
-                    info: ScanInfo, viewVersion: Long): Option[LogicalPlan] = {
+                    scan: ManifestScan, viewVersion: Long): Option[LogicalPlan] = {
     val viewPlan = IncrementalAgg.readAt(spark, mv.aggPath, viewVersion)
       .queryExecution.analyzed
     def viewAttr(name: String): Option[Attribute] = viewPlan.output.find(_.name == name)
-
-    def physOf(e: Expression): Option[String] = e match {
-      case ar: AttributeReference => info.colOf.get(ar.exprId).map(_._1)
-      case _ => None
-    }
     // Translate an expression onto the view: every referenced
     // attribute must map to a REGISTERED GROUP COLUMN (such an
     // expression is constant within each view row-group, so grouping
@@ -319,23 +201,11 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     def translate(e: Expression): Option[Expression] = {
       // expand computed aliases (pulled-out grouping expressions)
       // down to scan-level attrs first, then map those onto the view
-      val resolved = e.transform {
-        case ar: AttributeReference => info.derived.getOrElse(ar.exprId, ar)
-      }
-      if (!resolved.deterministic) return None
-      var ok = true
-      val t = resolved.transform {
-        case ar: AttributeReference =>
-          info.colOf.get(ar.exprId).map(_._1) match {
-            case Some(c) if mv.groupCols.contains(c) =>
-              viewAttr(c) match {
-                case Some(va) if va.dataType == ar.dataType => va
-                case _ => ok = false; ar
-              }
-            case _ => ok = false; ar
-          }
-      }
-      if (ok) Some(t) else None
+      val resolved = scan.resolve(e)
+      if (!resolved.deterministic) None
+      else ManifestScan.rebind(resolved)(ar =>
+        scan.physOf(ar).filter(mv.groupCols.contains).flatMap(viewAttr)
+          .filter(_.dataType == ar.dataType))
     }
 
     // grouping: any deterministic expressions over group columns
@@ -345,7 +215,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
       .map { case (t, i) => Alias(t, s"__mvg_$i")() }
 
     // filters: every reference must be a group column
-    val translated = info.filters.map(translate)
+    val translated = scan.filters.map(translate)
     if (translated.exists(_.isEmpty)) return None
     val filtered = translated.flatten
       .foldLeft(viewPlan)((p, c) => Filter(c, p))
@@ -386,7 +256,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         // row-groups on both sides.)
         case AggregateExpression(Count(Seq(ar: AttributeReference)), _, true, None, _) =>
           for {
-            c <- physOf(ar)
+            c <- scan.physOf(ar)
             if mv.groupCols.contains(c)
             va <- viewAttr(c)
             if va.dataType == ar.dataType && origType == LongType
@@ -405,7 +275,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // count re-aggregates exactly (long addition)
           case Count(Seq(ar: AttributeReference)) =>
             for {
-              c <- physOf(ar)
+              c <- scan.physOf(ar)
               if mv.sumCols.contains(c)
               cnt <- viewAttr(s"cnt_$c")
               if cnt.dataType == LongType && origType == LongType
@@ -424,7 +294,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // maintained non-null count for NULL correctness.
           case Sum(ar: AttributeReference, _) =>
             for {
-              c <- physOf(ar)
+              c <- scan.physOf(ar)
               if mv.sumCols.contains(c)
               va <- viewAttr(s"sum_$c")
               cnt <- viewAttr(s"cnt_$c")
@@ -462,14 +332,14 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           case avFn @ Average(ar: AttributeReference, _) =>
             val av = avFn.asInstanceOf[Average]
             for {
-              c <- physOf(ar)
+              c <- scan.physOf(ar)
               if mv.sumCols.contains(c)
               va <- viewAttr(s"sum_$c")
               cnt <- viewAttr(s"cnt_$c")
               if cnt.dataType == LongType
               decimal <- (ar.dataType, va.dataType) match {
                 case (LongType, LongType)
-                    if origType == DoubleType && avgExactProof(info, c) =>
+                    if origType == DoubleType && avgExactProof(scan, c) =>
                   Some(false)
                 case (_: DecimalType, vd: DecimalType)
                     if vd == av.sumDataType && origType == av.dataType =>
@@ -488,7 +358,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           // the bound (fast-refresh-on-append contract)
           case Min(ar: AttributeReference) =>
             for {
-              c <- physOf(ar)
+              c <- scan.physOf(ar)
               if mv.minMaxCols.contains(c)
               va <- viewAttr(s"min_$c")
               if va.dataType == origType
@@ -499,7 +369,7 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
             }
           case Max(ar: AttributeReference) =>
             for {
-              c <- physOf(ar)
+              c <- scan.physOf(ar)
               if mv.minMaxCols.contains(c)
               va <- viewAttr(s"max_$c")
               if va.dataType == origType
@@ -582,8 +452,8 @@ case class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     * — O(entries) driver arithmetic, no job, the [[StatsAggRule]]
     * machinery applied to an optimizer soundness proof. Any entry
     * missing stats, null counts, or a rowcount fails the proof. */
-  private def avgExactProof(info: ScanInfo, c: String): Boolean = {
-    val entries = info.idx.entryMetas
+  private def avgExactProof(scan: ManifestScan, c: String): Boolean = {
+    val entries = scan.index.entryMetas
     // NULLS need no clause of their own any more: the view maintains
     // count(v) per group (cnt_<c>), so the divide's denominator is
     // exact, and the bound below only strengthens (non-null rows ≤

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
 import graft.ops.GraftFileIndex
@@ -452,88 +451,34 @@ case class StatsAggRule(spark: SparkSession)
     * branches (a self-union double-counts in both the scan and the
     * fold). Branch schemas must agree positionally by (name, type) —
     * the aggregate references the HEAD branch's attributes — and
-    * every branch must share the table root and partition column. */
-  private def resolveScan(p: LogicalPlan): Option[ResolvedScan] = p match {
-    case u: Union =>
-      val branches = u.children.map(resolveBranch)
-      if (branches.exists(_.isEmpty)) None
-      else {
-        val bs = branches.flatten
-        val shape = bs.head._1.output.map(a => (a.name, a.dataType))
-        val sameShape = bs.forall(_._1.output.map(a => (a.name, a.dataType)) == shape)
-        val roots = bs.map(_._2.rootPaths.headOption).distinct
-        val pcols = bs.map(_._2.partitionColName).distinct
-        if (!sameShape || roots.size != 1 || pcols.size != 1) None
-        else {
-          val narrowed = bs.map { case (_, idx, colOf, aliasOf, filters) =>
-            narrow(idx.entryMetas, idx.partitionColName, colOf, aliasOf, filters,
-              idx.writerTz)
-          }
-          if (narrowed.exists(_.isEmpty)) None
-          else {
-            val (_, headIdx, headCols, headAliases, _) = bs.head
-            Some(ResolvedScan(narrowed.flatten.flatten,
-              headIdx.partitionColName, headCols, headAliases, headIdx.writerTz))
-          }
-        }
-      }
-    case other => resolveBranch(other).flatMap { case (_, idx, colOf, aliasOf, filters) =>
-      narrow(idx.entryMetas, idx.partitionColName, colOf, aliasOf, filters,
-          idx.writerTz)
-        .map(ResolvedScan(_, idx.partitionColName, colOf, aliasOf, idx.writerTz))
+    * every branch must share the table root and partition column.
+    *
+    * Each branch walks ([[ManifestScan]]) to a bare scan, carrying
+    * the computed deterministic aliases (the analyzer pulls a
+    * computed grouping below the Aggregate as a `_groupingexpression`
+    * alias — [[rewriteGrouped]] adjudicates and evaluates them) and
+    * the deterministic Filters for [[narrow]] to adjudicate. */
+  private def resolveScan(p: LogicalPlan): Option[ResolvedScan] = {
+    val branches = p match {
+      case u: Union => u.children
+      case other => Seq(other)
+    }
+    val scans = branches.map(ManifestScan.of)
+    if (scans.exists(_.isEmpty)) return None
+    val ss = scans.flatten
+    val shape = branches.head.output.map(a => (a.name, a.dataType))
+    if (!branches.forall(_.output.map(a => (a.name, a.dataType)) == shape) ||
+        ss.map(_.root).distinct.size != 1 ||
+        ss.map(_.index.partitionColName).distinct.size != 1) return None
+    val narrowed = ss.map(s => narrow(s.index.entryMetas, s.index.partitionColName,
+      s.colOf, s.derived, s.filters, s.index.writerTz))
+    if (narrowed.exists(_.isEmpty)) None
+    else {
+      val head = ss.head
+      Some(ResolvedScan(narrowed.flatten.flatten, head.index.partitionColName,
+        head.colOf, head.derived, head.index.writerTz))
     }
   }
-
-  /** Walk one branch to a bare, un-narrowed [[GraftFileIndex]] scan,
-    * carrying the exprId → physical-column-name mapping through
-    * identity Projects (the reader's rename layer is
-    * `Alias(AttributeReference)`), recording NON-IDENTITY
-    * deterministic aliases (the analyzer pulls a computed grouping
-    * below the Aggregate as a `_groupingexpression` alias —
-    * [[rewriteGrouped]] adjudicates and evaluates them; an aggregate
-    * referencing one simply fails its colOf lookup and backs off),
-    * and collecting deterministic Filters for [[narrow]] to
-    * adjudicate. Recorded alias expressions are pre-inlined to
-    * scan-level references, so one transform resolves a grouping
-    * fully. Any other operator answers None. */
-  private def resolveBranch(p: LogicalPlan)
-      : Option[(LogicalPlan, GraftFileIndex, Map[ExprId, (String, DataType)],
-                Map[ExprId, Expression], Seq[Expression])] =
-    p match {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => fs.location match {
-          case g: GraftFileIndex if !g.isNarrowed =>
-            Some((p, g, lr.output.map(a => a.exprId -> (a.name, a.dataType)).toMap,
-              Map.empty, Nil))
-          case _ => None
-        }
-        case _ => None
-      }
-      case Project(projList, child) => resolveBranch(child).map { case (_, g, m, ax, f) =>
-        // MERGE the alias mappings rather than replace: a Filter
-        // below this Project references scan-level ids that must
-        // stay resolvable (exprIds are globally unique, no clashes)
-        val ids = m ++ projList.flatMap {
-          case al @ Alias(ar: AttributeReference, _) => m.get(ar.exprId).map(al.exprId -> _)
-          case _ => None // non-alias outputs simply aren't resolvable
-        }.toMap
-        val exprs = ax ++ projList.flatMap {
-          case al @ Alias(child, _)
-              if !child.isInstanceOf[AttributeReference] && child.deterministic =>
-            Some(al.exprId -> child.transformUp {
-              case ar: AttributeReference if ax.contains(ar.exprId) => ax(ar.exprId)
-            })
-          case _ => None
-        }.toMap
-        (p, g, ids, exprs, f)
-      }
-      case f: Filter if f.condition.deterministic =>
-        resolveBranch(f.child).map { case (_, g, m, ax, fs) =>
-          (p, g, m, ax, fs :+ f.condition) }
-      case SubqueryAlias(_, child) =>
-        resolveBranch(child).map { case (_, g, m, ax, fs) => (p, g, m, ax, fs) }
-      case _ => None
-    }
 
   /** Absorb the collected filters into an ENTRY subset, or back off.
     * Every row of an entry carries the entry's partition value, so

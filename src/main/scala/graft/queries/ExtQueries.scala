@@ -3771,7 +3771,7 @@ object ExtQueries {
     // version), then refresh — freshness pins the refreshed versions
     MvRegistry.register(spark, base, view, Seq("etype", "u10"), Seq("v"),
       durable = true)
-    MvJoinRegistry.register(spark, base, dim, jview, "etype", durable = true)
+    MvJoinRegistry.register(spark, base, dim, jview, Seq("etype"), durable = true)
     IncrementalAgg.refresh(spark, base, view, Seq("etype", "u10"), Seq("v"))
     IncrementalJoin.refresh(spark, base, dim, jview, Seq("event_id"), "etype", "day")
     def aggQ(): DataFrame = ManifestTable.read(spark, base)
@@ -4206,7 +4206,7 @@ object ExtQueries {
     ManifestTable.merge(spark, fact, ev, keys = Seq("event_id"), partitionCol = "day")
     ManifestTable.merge(spark, dim, dimDf, keys = Seq("user_id"), partitionCol = "pd")
     IncrementalJoin.refresh(spark, fact, dim, view, Seq("event_id"), "user_id", "day")
-    MvJoinRegistry.register(spark, fact, dim, view, "user_id")
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("user_id"))
     def query(): DataFrame = ManifestTable.read(spark, fact)
       .join(ManifestTable.read(spark, dim), Seq("user_id"))
       .groupBy(col("seg")).agg(count(lit(1)).as("n"), sum(col("v")).as("sv"))
@@ -4501,7 +4501,7 @@ object ExtQueries {
     IncrementalJoin.refresh(spark, base, dim, joinV, Seq("event_id"),
       "user_id", "day")
     MvRegistry.register(spark, base, aggV, Seq("etype", "u10"), Seq("v"))
-    MvJoinRegistry.register(spark, base, dim, joinV, "user_id")
+    MvJoinRegistry.register(spark, base, dim, joinV, Seq("user_id"))
     ManifestTable.read(spark, base).createOrReplaceTempView("q212_base")
     ManifestTable.read(spark, dim).createOrReplaceTempView("q212_dim")
     // 1. grouped dashboard → IncrementalAgg view
@@ -5040,7 +5040,7 @@ object ExtQueries {
       // register after the first batch lands
       input.addData(rowsOf(ev.filter(col("event_id") % 3 === 0)): _*)
       query.processAllAvailable()
-      MvJoinRegistry.register(spark, fact, dim, view, "user_id")
+      MvJoinRegistry.register(spark, fact, dim, view, Seq("user_id"))
       (1L to 2L).map { m =>
         input.addData(rowsOf(ev.filter(col("event_id") % 3 === m)): _*)
         query.processAllAvailable()

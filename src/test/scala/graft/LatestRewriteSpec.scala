@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Project, Window}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -83,6 +85,60 @@ class LatestRewriteSpec extends AnyFunSuite {
         s"the max_by plan must scan the view only: $r2")
       assert(rows2 == truth(aggQ(base)))
     } finally LatestRegistry.unregister(spark, base)
+  }
+
+  /** The unrewritten reference: scan roots and rows with the rule off. */
+  private def reference(df: => DataFrame): (Set[String], Seq[org.apache.spark.sql.Row]) = {
+    spark.conf.set("spark.graft.latestRewrite.enabled", "false")
+    try { val q = df; (roots(q), q.collect().toSeq) }
+    finally spark.conf.set("spark.graft.latestRewrite.enabled", "true")
+  }
+
+  /** The optimized plan keeps a computed (non-rename) Project below its
+    * first Window or Aggregate. */
+  private def computedBelow(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectFirst {
+      case w: Window => w.child
+      case a: Aggregate => a.child
+    }.exists(_.exists {
+      case Project(pl, _) => pl.exists {
+        case Alias(_: AttributeReference, _) => false
+        case _: Alias => true
+        case _ => false
+      }
+      case _ => false
+    })
+
+  /** Registers a fresh latest view over a seeded base and checks that
+    * `q` (over the base with a computed `p2` column) declines: the plan
+    * scans the base like the kill-switch run and returns its rows. */
+  private def assertComputedDeclines(tag: String)(q: DataFrame => DataFrame): Unit = {
+    val (base, view) = fresh(tag)
+    seed(base)
+    IncrementalLatest.refresh(spark, base, view, Seq("asset"), Seq("ts", "id"))
+    LatestRegistry.register(spark, base, view, Seq("asset"), Seq("ts", "id"))
+    try {
+      def df = q(ManifestTable.read(spark, base).withColumn("p2", col("price") * 2))
+      assert(computedBelow(df), "the computed Project must survive optimization")
+      val (d, r, rows) = run(df)
+      val (refRoots, refRows) = reference(df)
+      assert(d == 0 && r == refRoots && r.exists(_.contains("/base")),
+        s"a computed Project below the $tag must DECLINE: delta=$d roots=$r")
+      assert(rows == refRows)
+    } finally LatestRegistry.unregister(spark, base)
+  }
+
+  test("a computed withColumn Project between the base scan and the " +
+    "row_number()=1 window declines to the scan") {
+    assertComputedDeclines("window")(df =>
+      Ops.latestPerKey(df, Seq("asset"), Seq(col("ts"), col("id")))
+        .select(col("asset"), col("ts"), col("p2")).orderBy(col("asset")))
+  }
+
+  test("a computed Project under max_by declines to the scan") {
+    assertComputedDeclines("max_by")(df =>
+      Ops.latestPerKeyAgg(df, Seq("asset"), struct(col("ts"), col("id")),
+        Seq("ts", "p2")).orderBy(col("asset")))
   }
 
   test("a KEY filter below the window re-applies on the view; a non-key " +

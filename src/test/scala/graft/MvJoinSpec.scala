@@ -55,7 +55,7 @@ class MvJoinSpec extends AnyFunSuite {
     "— neither base scanned — with join-identical rows, filters absorbed") {
     val (fact, dim, view) = fresh("basic")
     seed(fact, dim, view)
-    MvJoinRegistry.register(spark, fact, dim, view, "uid")
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"))
     try {
       def q = ManifestTable.read(spark, fact)
         .join(ManifestTable.read(spark, dim), Seq("uid"))
@@ -85,7 +85,7 @@ class MvJoinSpec extends AnyFunSuite {
     "refresh; fact appends likewise") {
     val (fact, dim, view) = fresh("stale")
     seed(fact, dim, view)
-    MvJoinRegistry.register(spark, fact, dim, view, "uid")
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"))
     try {
       def q = ManifestTable.read(spark, fact)
         .join(ManifestTable.read(spark, dim), Seq("uid"))
@@ -116,7 +116,7 @@ class MvJoinSpec extends AnyFunSuite {
     val aggView = view + "_agg"
     seed(fact, dim, view)
     graft.ops.IncrementalAgg.refresh(spark, view, aggView, Seq("seg"), Seq("v"))
-    MvJoinRegistry.register(spark, fact, dim, view, "uid")
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"))
     graft.plans.MvRegistry.register(spark, view, aggView, Seq("seg"), Seq("v"))
     try {
       def q = ManifestTable.read(spark, fact)
@@ -149,7 +149,7 @@ class MvJoinSpec extends AnyFunSuite {
     ManifestTable.merge(spark, fact, f, Seq("id"), "day", statsColumns = Seq("uid"))
     ManifestTable.merge(spark, dim, dm, Seq("uid"), "du")
     IncrementalJoin.refresh(spark, fact, dim, view, Seq("id"), "uid", "day")
-    MvJoinRegistry.register(spark, fact, dim, view, "uid")
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"))
     try {
       // make the view STALE (dim moves on)
       ManifestTable.merge(spark, dim,
@@ -187,7 +187,7 @@ class MvJoinSpec extends AnyFunSuite {
       f.join(d, Seq("uid")).select(col("id"), col("seg"))
     // unregistered
     assert(run(q(ManifestTable.read(spark, fact), ManifestTable.read(spark, dim)))._1 == 0)
-    MvJoinRegistry.register(spark, fact, dim, view, "uid")
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"))
     try {
       val (f, d) = (ManifestTable.read(spark, fact), ManifestTable.read(spark, dim))
       // join on a NON-registered key never rewrites
@@ -217,7 +217,7 @@ class MvJoinSpec extends AnyFunSuite {
     ManifestTable.merge(spark, dim, dm, Seq("uid"), "du")
     // register BEFORE refresh (the durable register bumps the fact
     // version; freshness pins the versions the refresh folded)
-    MvJoinRegistry.register(spark, fact, dim, view, "uid", durable = true)
+    MvJoinRegistry.register(spark, fact, dim, view, Seq("uid"), durable = true)
     IncrementalJoin.refresh(spark, fact, dim, view, Seq("id"), "uid", "day")
     def q = ManifestTable.read(spark, fact)
       .join(ManifestTable.read(spark, dim), Seq("uid"))
@@ -239,6 +239,46 @@ class MvJoinSpec extends AnyFunSuite {
     assert(d3 == 0 && r3.exists(_.endsWith("/fact")),
       "after durable unregister the join must scan again")
     assert(rows3 == t)
+  }
+
+  test("durable unregister of one dim leaves the fact's other dim view " +
+    "rewriting, in memory and after the in-memory registry clears") {
+    val d = java.nio.file.Files.createTempDirectory("graft_mvj_twodim").toString
+    val (fact, dimA, dimB) = (d + "/fact", d + "/dimA", d + "/dimB")
+    val (viewA, viewB) = (d + "/jviewA", d + "/jviewB")
+    val f = (1L to 40L).map(i => (i, s"d${i % 4}", i % 7, i * 3L))
+      .toDF("id", "day", "uid", "v")
+    ManifestTable.merge(spark, fact, f, Seq("id"), "day")
+    ManifestTable.merge(spark, dimA, (0L to 6L).map(u => (u, s"seg-${u % 3}",
+      s"du${u % 2}")).toDF("uid", "seg", "du"), Seq("uid"), "du")
+    ManifestTable.merge(spark, dimB, (0L to 6L).map(u => (u, s"tier-${u % 2}",
+      s"du${u % 2}")).toDF("uid", "tier", "du"), Seq("uid"), "du")
+    MvJoinRegistry.register(spark, fact, dimA, viewA, Seq("uid"), durable = true)
+    MvJoinRegistry.register(spark, fact, dimB, viewB, Seq("uid"), durable = true)
+    IncrementalJoin.refresh(spark, fact, dimA, viewA, Seq("id"), "uid", "day")
+    IncrementalJoin.refresh(spark, fact, dimB, viewB, Seq("id"), "uid", "day")
+    def qA = ManifestTable.read(spark, fact)
+      .join(ManifestTable.read(spark, dimA), Seq("uid"))
+      .select(col("id"), col("uid"), col("seg"), col("v"))
+    def qB = ManifestTable.read(spark, fact)
+      .join(ManifestTable.read(spark, dimB), Seq("uid"))
+      .select(col("id"), col("uid"), col("tier"), col("v"))
+    val (tA, tB) = (truth(qA), truth(qB))
+    try {
+      assert(run(qA)._1 == 1 && run(qB)._1 == 1, "both dims rewrite")
+      MvJoinRegistry.unregister(spark, fact, dimA, durable = true)
+      for (stage <- Seq("in memory", "after clearInMemory")) {
+        if (stage != "in memory") MvJoinRegistry.clearInMemory()
+        val (dA, rA, rowsA) = run(qA)
+        assert(dA == 0 && rA.exists(_.endsWith("/fact")),
+          s"$stage: the unregistered dim must scan: $rA")
+        assert(rowsA == tA)
+        val (dB, rB, rowsB) = run(qB)
+        assert(dB == 1 && rB.nonEmpty && rB.forall(_.endsWith("/jviewB")),
+          s"$stage: the other dim's view must still answer: $rB")
+        assert(rowsB == tB)
+      }
+    } finally MvJoinRegistry.unregister(spark, fact, dimB, durable = true)
   }
 
   test("COMPOSITE-KEY inner join rewrites: the equality conjunction must " +

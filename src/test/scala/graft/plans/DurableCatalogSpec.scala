@@ -38,13 +38,13 @@ class DurableCatalogSpec extends AnyFunSuite {
     assert(fs.rename(mfile, aside))
     assert(fs.mkdirs(mfile))
     try {
-      assert(MvRegistry.lookup(spark, root).isEmpty,
+      assert(MvRegistry.catalog.lookup(spark, root).isEmpty,
         "the failing lookup itself degrades to no-defs (scan fallback)")
     } finally {
       fs.delete(mfile, true)
       assert(fs.rename(aside, mfile))
     }
-    val retried = MvRegistry.lookup(spark, root)
+    val retried = MvRegistry.catalog.lookup(spark, root)
     assert(retried.nonEmpty && retried.head.aggPath == s"$d/view",
       s"the failure must not be memoized for (base, version): $retried")
     MvRegistry.unregister(spark, base, durable = true)
