@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.ManifestTable
+import graft.ops.{GenPointer, ManifestTable}
 
 /** PERSISTED k-means centroids + assignments — the [[IvfStore]]/
   * [[PqStore]] trainCommit/appendBatch pattern applied to [[Cluster]]
@@ -31,52 +31,35 @@ import graft.ops.ManifestTable
   * store's results gateable cross-engine (q190) where a float
   * centroid store would drift in the last ulp.
   *
-  * Retrain is BLUE/GREEN ([[retrainCommit]], the sibling stores'
-  * shape): assignments move wholesale when centroids move, so the
-  * next generation builds whole under `base/gen-NNNNNN/` while
-  * readers keep resolving the current one, then a one-CAS
-  * [[graft.ops.GenPointer]] flip cuts them over. Generation 0 is the
-  * legacy flat layout — pre-pointer tables keep working untouched.
+  * Retrain is BLUE/GREEN ([[retrainCommit]], [[graft.ops.GenStore]]):
+  * assignments move wholesale when centroids move. Stale centroids
+  * mean a drifted geometry and skewed clusters ([[needsRetrain]]).
+  * Erasure ([[eraseKeys]]) removes assignments, not centroids: a
+  * (vec_id, cluster) row is per-subject derived data — leaving it
+  * keeps the subject in every [[balancedSampleCommitted]] draw.
   */
-object CentroidStore {
+object CentroidStore extends TrainedStore("centroids", "assignments",
+    "cluster_id", "kmeans.trained_rows") {
 
   val KProp = "kmeans.k"
-  val TrainedRowsProp = "kmeans.trained_rows"
 
-  def centroidsPath(base: String): String = s"$base/centroids"
-  def assignmentsPath(base: String): String = s"$base/assignments"
-
-  /** Resolve `base` through the blue/green pointer ([[IvfStore]]'s
-    * contract): the root whose tables are CURRENT. */
-  def resolvedBase(spark: SparkSession, base: String): String =
-    graft.ops.GenPointer.resolved(spark, base)
+  def centroidsPath(base: String): String = modelPath(base)
+  def assignmentsPath(base: String): String = dataPath(base)
 
   /** Train on `corpus` ([[Cluster.trainQuantized]]) and commit both
-    * tables ATOMICALLY ([[graft.ops.ManifestTxn]] — assignments
-    * without their matrix are uninterpretable; do not call inside an
-    * outer transaction). One extra bounded count job records the
-    * drift denominator. */
+    * tables ATOMICALLY ([[TrainedStore]]'s train commit — assignments
+    * without their matrix are uninterpretable). */
   def trainCommit(spark: SparkSession, base: String, corpus: DataFrame,
                   k: Int, iters: Int = 2,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val nTrained = corpus.count()
-    val cents = Cluster.trainQuantized(corpus, k, iters, idCol, vecCol)
-    import spark.implicits._
-    val centsDf = cents.zipWithIndex
-      .map { case (c, i) => (i + 1, c) }.toDF("cluster_id", "centroid")
-    graft.ops.ManifestTxn.run(spark, s"$base/_txn") {
-      ManifestTable.merge(spark, centroidsPath(base), centsDf,
-        keys = Seq("cluster_id"), partitionCol = "cluster_id",
-        props = Map(KProp -> k.toString, TrainedRowsProp -> nTrained.toString))
-      // statsColumns => per-partition rowcounts => needsRetrain's count
-      // stays metadata-only forever. Blooms on the id so [[eraseKeys]]
-      // narrows to the clusters that might hold a subject.
-      ManifestTable.merge(spark, assignmentsPath(base),
-        Cluster.assignQuantized(corpus, cents, idCol, vecCol),
-        keys = Seq(idCol), partitionCol = "cluster_id", statsColumns = Seq(idCol),
-        bloomColumns = Seq(idCol))
+                  idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    commitTrained(spark, base, corpus, idCol, Seq("cluster_id"),
+      Map(KProp -> k.toString)) {
+      val cents = Cluster.trainQuantized(corpus, k, iters, idCol, vecCol)
+      import spark.implicits._
+      val centsDf = cents.zipWithIndex
+        .map { case (c, i) => (i + 1, c) }.toDF("cluster_id", "centroid")
+      (centsDf, Cluster.assignQuantized(corpus, cents, idCol, vecCol))
     }
-  }
 
   /** The committed matrix, 1-based cluster id = position — a bounded
     * k·dim collect (the [[Cluster]] driver-traffic class). */
@@ -97,48 +80,17 @@ object CentroidStore {
     * the q190 gate pins that). */
   final case class AppendResult(rowsAssigned: Long, clustersTouched: Set[String])
 
-  /** Assign a NEW batch against the COMMITTED centroids and merge it
-    * into the assignments table: the assignment is a pure projection
-    * of the batch (centroids ride in as a literal — no join, no
-    * shuffle); the merge rewrites only the cluster partitions the
-    * batch lands in. */
+  /** Assign a NEW batch against the COMMITTED centroids — a pure
+    * projection of the batch (centroids ride in as a literal — no
+    * join, no shuffle) — and merge it into the assignments table
+    * ([[TrainedStore]]'s batch merge). */
   def assignBatch(spark: SparkSession, base: String, batch: DataFrame,
                   idCol: String = "vec_id", vecCol: String = "embedding"): AppendResult = {
     val root = resolvedBase(spark, base) // current generation's tables
     val cents = committedCentroids(spark, root)
-    val assigned = Cluster.assignQuantized(batch, cents, idCol, vecCol)
-      .localCheckpoint() // assign once: the merge re-references it twice
-    val clusters = assigned.select(col("cluster_id").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet // bounded: ≤ k rows
-    ManifestTable.merge(spark, assignmentsPath(root), assigned,
-      keys = Seq(idCol), partitionCol = "cluster_id", statsColumns = Seq(idCol),
-      bloomColumns = Seq(idCol), knownTouched = Some(clusters))
-    val n = assigned.count()
-    graft.ops.Intermediates.release(assigned)
+    val (n, clusters) = mergeBatch(spark, root,
+      Cluster.assignQuantized(batch, cents, idCol, vecCol), idCol)
     AppendResult(n, clusters)
-  }
-
-  /** ERASE vectors FROM THE ASSIGNMENTS TABLE — a (vec_id, cluster)
-    * row is per-subject derived data; leaving it keeps the subject in
-    * every [[balancedSampleCommitted]] draw. One bloom-pruned
-    * [[ManifestTable.deleteByKeysMoR]] (DV sidecar, zero dirs
-    * rewritten); the CENTROID MATRIX stays — a whole-corpus aggregate
-    * refreshed under [[needsRetrain]]. The default is LOGICAL erasure
-    * only — masked bytes persist until compaction + retention expiry;
-    * `physical = true` runs [[ManifestTable.purgeDeletes]] for
-    * immediate byte removal (see [[IvfStore.eraseKeys]]). */
-  def eraseKeys(spark: SparkSession, base: String, vecIds: Seq[Long],
-                retainVersions: Int = 2,
-                idCol: String = "vec_id",
-                physical: Boolean = false): IvfStore.EraseResult = {
-    require(vecIds.nonEmpty, "CentroidStore.eraseKeys: empty vector id list")
-    val root = resolvedBase(spark, base) // current generation's tables
-    val d = ManifestTable.deleteByKeysMoR(spark, assignmentsPath(root), "cluster_id",
-      idCol, vecIds.map(_.toString), retainVersions = retainVersions)
-    if (physical) ManifestTable.purgeDeletes(spark, assignmentsPath(root),
-      statsColumns = Seq(idCol), bloomColumns = Seq(idCol))
-    IvfStore.EraseResult(d.op.rowsDeleted, d.dirsProbed, d.dirsTotal,
-      d.op.dirsRewritten)
   }
 
   /** [[Cluster.balancedSampleFrom]] over the committed assignments —
@@ -150,56 +102,13 @@ object CentroidStore {
         assignmentsPath(resolvedBase(spark, base))), cap, idCol)
 
   /** BLUE/GREEN RETRAIN — [[IvfStore.retrainCommit]]'s contract for
-    * the curation k-means pair: heartbeat, full side-by-side
-    * [[trainCommit]] of the next generation, one CAS flip, then
-    * retire generations beyond `keepGenerations` (or the full orphan
-    * [[vacuumGenerations]] sweep when `vacuumOrphans` — in-flight
-    * rivals stay protected by the inactivity horizon). Returns the
-    * new generation number. */
+    * the curation k-means pair. Returns the new generation number. */
   def retrainCommit(spark: SparkSession, base: String, corpus: DataFrame,
                     k: Int, iters: Int = 2,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     keepGenerations: Int = 2,
                     vacuumOrphans: Boolean = false,
-                    orphanHorizonMs: Long = 24L * 3600 * 1000): Long = {
-    import graft.ops.GenPointer
-    val fs = GenPointer.fsOf(spark, base)
-    val next = GenPointer.next(fs, base)
-    GenPointer.heartbeat(fs, base, next)
-    trainCommit(spark, GenPointer.root(base, next), corpus, k, iters, idCol, vecCol)
-    GenPointer.flip(fs, base, next)
-    if (vacuumOrphans)
-      GenPointer.vacuum(fs, base, keepGenerations,
-        Seq("centroids", "assignments", "_txn"), orphanHorizonMs)
-    else
-      GenPointer.retire(fs, base, keepGenerations,
-        Seq("centroids", "assignments", "_txn"))
-    next
-  }
-
-  /** GENERATION GC — [[IvfStore.vacuumGenerations]]'s contract for
-    * the curation pair's layout (flipped retention + dead-orphan
-    * sweep with the in-flight-build horizon). */
-  def vacuumGenerations(spark: SparkSession, base: String, keep: Int = 2,
-                        orphanHorizonMs: Long = 24L * 3600 * 1000)
-      : graft.ops.GenPointer.VacuumResult =
-    graft.ops.GenPointer.vacuum(graft.ops.GenPointer.fsOf(spark, base), base,
-      keep, Seq("centroids", "assignments", "_txn"), orphanHorizonMs)
-
-  /** O(1) DRIFT-TRIGGERED RETRAIN POLICY — committed training size vs
-    * the assignments table's metadata-only count (the [[IvfStore]]
-    * policy; stale centroids mean a drifted geometry and skewed
-    * clusters). */
-  def needsRetrain(spark: SparkSession, base: String,
-                   growthFactor: Double = 1.5): IvfStore.DriftCheck = {
-    val root = resolvedBase(spark, base) // drift of the CURRENT generation
-    val trained = ManifestTable.readProps(spark, centroidsPath(root))
-      .getOrElse(TrainedRowsProp, sys.error(
-        s"CentroidStore.needsRetrain: no $TrainedRowsProp property under $base — " +
-          "not a CentroidStore-committed model")).toLong
-    require(trained > 0, s"CentroidStore.needsRetrain: trained_rows = $trained")
-    val c = ManifestTable.fastCount(spark, assignmentsPath(root))
-    IvfStore.DriftCheck(c.rows, trained, c.metadataOnly,
-      c.rows.toDouble / trained > growthFactor)
-  }
+                    orphanHorizonMs: Long = GenPointer.OrphanHorizonMs): Long =
+    rebuild(spark, base, keepGenerations, vacuumOrphans, orphanHorizonMs)(
+      trainCommit(spark, _, corpus, k, iters, idCol, vecCol))
 }

@@ -1,20 +1,16 @@
 package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.ops.ManifestTable
+import graft.ops.{GenPointer, ManifestTable}
 
 /** PERSISTED, INCREMENTALLY MAINTAINED IVF index — the missing piece
   * between [[Ivf]] (which trains per session) and a 100 TB corpus
   * where the index OUTLIVES the job: centroids and the inverted index
   * commit as [[ManifestTable]]s, a NEW document batch is assigned
-  * against the committed centroids WITHOUT retraining (and without
-  * re-scanning the existing corpus — the assignment plan's only input
-  * is the batch; the index merge rewrites only the list partitions
-  * the batch lands in), and a drift policy decides retraining from
-  * O(1) metadata (committed trained-size property vs the index
-  * table's metadata-only row count — no file opened, no Spark job).
+  * against the committed centroids WITHOUT retraining or re-scanning
+  * the existing corpus, and a drift policy decides retraining from
+  * O(1) metadata ([[needsRetrain]]).
   *
   * Layout under `base/`:
   *   - `centroids/` — (list_id, centroid), partitioned+keyed by
@@ -24,87 +20,46 @@ import graft.ops.ManifestTable
   *     (the physical layout [[Ivf.search]]'s probe wants: a query's
   *     nProbe lists are whole directories) and keyed by idCol.
   *
-  * Retrain is BLUE/GREEN ([[retrainCommit]]): assignments move
-  * wholesale when centroids move, so an in-place retrain would
-  * rewrite the whole index table under live readers — instead the new
-  * generation builds side-by-side under `base/gen-NNNNNN/` and a
-  * one-CAS pointer flip ([[graft.ops.GenPointer]]) cuts every reader
-  * over atomically. All read/maintain entry points resolve the
-  * current generation first; generation 0 is the legacy flat layout,
-  * so pre-pointer tables keep working untouched.
+  * Retrain is BLUE/GREEN ([[retrainCommit]], [[graft.ops.GenStore]]):
+  * assignments move wholesale when centroids move, so an in-place
+  * retrain would rewrite the whole index table under live readers.
+  * Train commit, batch merge, erasure, drift check and keep-set probe
+  * are [[TrainedStore]]'s.
   */
-object IvfStore {
+object IvfStore extends TrainedStore("centroids", "index", "list_id",
+    "ivf.trained_rows") {
 
   val KProp = "ivf.k"
-  val TrainedRowsProp = "ivf.trained_rows"
 
-  def centroidsPath(base: String): String = s"$base/centroids"
-  def indexPath(base: String): String = s"$base/index"
+  def centroidsPath(base: String): String = modelPath(base)
+  def indexPath(base: String): String = dataPath(base)
 
-  /** The generation the readers/maintainers currently resolve —
-    * 0 until the first [[retrainCommit]] flip. */
-  def currentGeneration(spark: SparkSession, base: String): Long =
-    graft.ops.GenPointer.current(graft.ops.GenPointer.fsOf(spark, base), base)
-
-  /** Resolve `base` through the blue/green pointer: the root whose
-    * `centroids/` + `index/` are CURRENT. */
-  def resolvedBase(spark: SparkSession, base: String): String =
-    graft.ops.GenPointer.resolved(spark, base)
-
-  /** Train on `corpus` and commit both tables ATOMICALLY (a
-    * [[graft.ops.ManifestTxn]] over `base/_txn` — a crash between the
-    * centroids and index commits would otherwise leave an index whose
-    * assignments reference centroids no reader can see, the exact
-    * two-table skew the transaction layer exists for; do not call
-    * inside an outer transaction). One extra bounded count job
-    * records the drift denominator. Generation-BLIND: it writes the
-    * given root verbatim ([[retrainCommit]] uses it to build new
-    * generation dirs; calling it directly on a flipped base would
-    * write the retired legacy dirs, not the current generation). */
+  /** Train on `corpus` and commit centroids + index ATOMICALLY
+    * ([[TrainedStore]]'s train commit: generation-blind, refuses a
+    * flipped base). */
   def trainCommit(spark: SparkSession, base: String, corpus: DataFrame,
                   k: Int, iters: Int = 3,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val nTrained = corpus.count()
-    val cents = Ivf.train(corpus, k, iters, idCol, vecCol)
-    graft.ops.ManifestTxn.run(spark, s"$base/_txn") {
-      ManifestTable.merge(spark, centroidsPath(base), cents,
-        keys = Seq("list_id"), partitionCol = "list_id",
-        props = Map(KProp -> k.toString, TrainedRowsProp -> nTrained.toString))
-      // statsColumns => per-partition rowcounts => needsRetrain's count
-      // stays metadata-only forever (appends re-record on touched lists,
-      // untouched entries carry theirs forward). Blooms on the id so
-      // [[eraseKeys]] narrows to the lists that might hold a subject.
-      ManifestTable.merge(spark, indexPath(base), Ivf.index(corpus, cents, idCol, vecCol),
-        keys = Seq(idCol), partitionCol = "list_id", statsColumns = Seq(idCol),
-        bloomColumns = Seq(idCol))
+                  idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    commitTrained(spark, base, corpus, idCol, Seq("list_id"),
+      Map(KProp -> k.toString)) {
+      val cents = Ivf.train(corpus, k, iters, idCol, vecCol)
+      (cents, Ivf.index(corpus, cents, idCol, vecCol))
     }
-  }
 
   /** Evidence an [[appendBatch]] returns: how many rows were assigned
     * (== the batch — the existing corpus is never re-scanned) and
     * which lists the merge rewrote. */
   final case class AppendResult(rowsAssigned: Long, listsTouched: Set[String])
 
-  /** Assign a NEW batch against the COMMITTED centroids and merge it
-    * into the index table. No retraining, no corpus re-scan: the
-    * assignment is batch ⨯ broadcast(k centroids); the merge reads
-    * and rewrites only the list partitions the batch hits (untouched
-    * lists' manifest entries carry forward verbatim — the q178 gate
-    * pins exactly that). Batch ids upsert by key (LWW), so a
-    * re-delivered batch is idempotent. */
+  /** Assign a NEW batch against the COMMITTED centroids (batch ⨯
+    * broadcast(k centroids)) and merge it into the index table
+    * ([[TrainedStore]]'s batch merge: only the hit lists rewrite — the
+    * q178 gate pins exactly that). */
   def appendBatch(spark: SparkSession, base: String, batch: DataFrame,
                   idCol: String = "vec_id", vecCol: String = "embedding"): AppendResult = {
     val root = resolvedBase(spark, base) // current generation's tables
     val cents = ManifestTable.read(spark, centroidsPath(root))
-    val assigned = Ivf.index(batch, cents, idCol, vecCol)
-      .localCheckpoint() // assign once: the merge re-references it twice
-    val lists = assigned.select(col("list_id").cast("string")).distinct()
-      .collect().map(_.getString(0)).toSet // bounded: ≤ k rows
-    ManifestTable.merge(spark, indexPath(root), assigned,
-      keys = Seq(idCol), partitionCol = "list_id", statsColumns = Seq(idCol),
-      bloomColumns = Seq(idCol), knownTouched = Some(lists))
-    val n = assigned.count()
-    graft.ops.Intermediates.release(assigned)
+    val (n, lists) = mergeBatch(spark, root, Ivf.index(batch, cents, idCol, vecCol), idCol)
     AppendResult(n, lists)
   }
 
@@ -112,39 +67,6 @@ object IvfStore {
     * evidence ((probed, total) list dirs; zero rewritten). */
   final case class EraseResult(rowsErased: Long, dirsProbed: Long,
                                dirsTotal: Long, dirsRewritten: Long)
-
-  /** ERASE vectors FROM THE INDEX — an indexed embedding is derived
-    * personal data; erasing the base corpus row alone leaves the
-    * vector servable from [[searchCommitted]] forever. One
-    * bloom-pruned [[ManifestTable.deleteByKeysMoR]] over the index
-    * table (DV sidecar, zero dirs rewritten); the CENTROIDS stay — a
-    * k-means centroid is an aggregate over the whole training set,
-    * not any subject's record (the same reasoning under which a
-    * trained model survives an erasure request), and [[needsRetrain]]
-    * governs their eventual refresh.
-    *
-    * SCOPE OF THE DEFAULT: the DV delete makes the vectors LOGICALLY
-    * unreadable — every read path (search, drift, re-probe) behaves
-    * as if they are gone — but their bytes remain in the data files
-    * (masked) and in retained prior versions until a rewrite folds
-    * the DVs in and retention expires (the caveat Delta documents for
-    * deletion vectors + VACUUM). `physical = true` completes removal
-    * immediately: [[ManifestTable.purgeDeletes]] rewrites exactly the
-    * DV'd dirs and expires prior versions to 1 — bytes gone at the
-    * cost of rewriting those dirs and of time travel past this
-    * commit. */
-  def eraseKeys(spark: SparkSession, base: String, vecIds: Seq[Long],
-                retainVersions: Int = 2,
-                idCol: String = "vec_id",
-                physical: Boolean = false): EraseResult = {
-    require(vecIds.nonEmpty, "IvfStore.eraseKeys: empty vector id list")
-    val root = resolvedBase(spark, base) // current generation's tables
-    val d = ManifestTable.deleteByKeysMoR(spark, indexPath(root), "list_id",
-      idCol, vecIds.map(_.toString), retainVersions = retainVersions)
-    if (physical) ManifestTable.purgeDeletes(spark, indexPath(root),
-      statsColumns = Seq(idCol), bloomColumns = Seq(idCol))
-    EraseResult(d.op.rowsDeleted, d.dirsProbed, d.dirsTotal, d.op.dirsRewritten)
-  }
 
   /** [[Ivf.search]] over the committed tables of the CURRENT
     * generation (resolved once, at plan time: a search planned before
@@ -166,133 +88,34 @@ object IvfStore {
   /** FILTERED ANN — the retrieval-stack "hybrid search" probe as ONE
     * library call: approximate top-k over ONLY the vectors whose ids
     * survive `keep` (a keyword prefilter, an ACL cut, a dedup
-    * verdict…), with the filter applied BEFORE any scoring:
-    *
-    *   - DIR level: the index's list dirs are pruned at planning time
-    *     through the committed per-dir id blooms + zone maps
-    *     ([[ManifestTable.readJoinPruned]]) — a list provably holding
-    *     none of the kept ids is never read (at 100 TB, a selective
-    *     prefilter turns the probe into a few-dir fetch);
-    *   - ROW level: a broadcast LEFT SEMI join against the distinct
-    *     kept ids drops non-surviving vectors before the cosine — no
-    *     score is ever computed for a filtered-out vector (the
-    *     post-filter alternative both wastes the scoring work AND
-    *     under-fills k).
-    *
-    * The bounded-probe contract holds: `keep` must fit the SAME
-    * broadcast-small envelope the planning probe needs —
-    * `maxKeepKeys` refuses loudly past it (a keep side too big to
-    * collect is too big to broadcast; run the plain scored join
-    * then). Exactness: pruning is conservative (false keeps only), so
-    * the result equals [[Ivf.search]] over the semi-joined index —
-    * and with `nProbe >= k-lists` it equals brute-force top-k over
-    * the kept subset outright. */
+    * verdict…), filtered BEFORE any scoring by [[TrainedStore]]'s
+    * keep-set probe. With `nProbe >= k-lists` the result equals
+    * brute-force top-k over the kept subset outright. */
   def searchFilteredCommitted(spark: SparkSession, base: String, queries: DataFrame,
                               k: Int, keep: DataFrame, keepCol: String = "vec_id",
                               nProbe: Int = 4,
                               idCol: String = "vec_id", vecCol: String = "embedding",
-                              maxKeepKeys: Int = 100000): FilteredSearch = {
-    val root = resolvedBase(spark, base)
-    // ONE evaluation of the (typically expensive) keep plan: the
-    // bounded distinct key set collects once and then drives BOTH the
-    // planning-time dir probe and the broadcast semi side as a LOCAL
-    // frame — the probe's internal collect re-reads only these local
-    // rows, never the upstream prefilter pipeline a second time.
-    val sel = keep.select(col(keepCol).as(idCol)).distinct()
-      .limit(maxKeepKeys + 1)
-    val rows = sel.collect()
-    require(rows.length <= maxKeepKeys,
-      s"IvfStore.searchFilteredCommitted: keep side exceeds $maxKeepKeys " +
-        "distinct keys — too large for the planning probe and the broadcast " +
-        "semi join; run the plain scored join, or raise maxKeepKeys deliberately")
-    import scala.jdk.CollectionConverters._
-    val keysDf = spark.createDataFrame(rows.toSeq.asJava, sel.schema)
-    val pruned = ManifestTable.readJoinPruned(spark, indexPath(root), idCol,
-      keysDf, idCol, maxKeys = maxKeepKeys)
-    val filteredIndex = pruned.df.join(broadcast(keysDf), Seq(idCol), "left_semi")
-    val out = Ivf.search(filteredIndex,
-      ManifestTable.read(spark, centroidsPath(root)), queries, k, nProbe,
-      idCol, vecCol)
-    FilteredSearch(out, pruned.dirsScanned, pruned.dirsTotal)
-  }
+                              maxKeepKeys: Int = 100000): FilteredSearch =
+    searchKept(spark, base, keep, keepCol, idCol, maxKeepKeys) { (root, kept) =>
+      Ivf.search(kept, ManifestTable.read(spark, centroidsPath(root)), queries,
+        k, nProbe, idCol, vecCol)
+    }
 
   /** BLUE/GREEN RETRAIN — the answer [[needsRetrain]]'s verdict calls
-    * for, without taking the index down: a FULL [[trainCommit]] of
-    * `corpus` builds the next generation side-by-side (readers keep
-    * resolving the current one through every second of training),
-    * then ONE [[graft.ops.GenPointer.flip]] CAS cuts all of them
-    * over. Two racing retrains build disjoint generation dirs and
-    * exactly one flip wins. `keepGenerations` retires older
-    * generations' data AFTER the flip (default 2: current + previous,
-    * so searches planned just before the flip finish against intact
-    * tables). `vacuumOrphans = true` additionally runs the
-    * [[vacuumGenerations]] orphan sweep right here — the janitor runs
-    * where the garbage is created (a crashed or CAS-losing rival's
-    * dir), instead of relying on operator discipline to call it; a
-    * rival build IN FLIGHT above the new pointer stays protected by
-    * the same `orphanHorizonMs` inactivity horizon (its
-    * [[graft.ops.GenPointer.heartbeat]] file is fresh). The build
-    * drops its own heartbeat before training starts, so a symmetric
-    * rival's vacuum can never mistake THIS build for an idle orphan
-    * either. Returns the new generation number. */
+    * for: a FULL [[trainCommit]] of `corpus` into the next generation,
+    * then one flip ([[graft.ops.GenStore]]'s rebuild). Returns the new
+    * generation number. */
   def retrainCommit(spark: SparkSession, base: String, corpus: DataFrame,
                     k: Int, iters: Int = 3,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     keepGenerations: Int = 2,
                     vacuumOrphans: Boolean = false,
-                    orphanHorizonMs: Long = 24L * 3600 * 1000): Long = {
-    import graft.ops.GenPointer
-    val fs = GenPointer.fsOf(spark, base)
-    val next = GenPointer.next(fs, base)
-    GenPointer.heartbeat(fs, base, next)
-    trainCommit(spark, GenPointer.root(base, next), corpus, k, iters, idCol, vecCol)
-    GenPointer.flip(fs, base, next)
-    if (vacuumOrphans)
-      GenPointer.vacuum(fs, base, keepGenerations,
-        Seq("centroids", "index", "_txn"), orphanHorizonMs)
-    else
-      GenPointer.retire(fs, base, keepGenerations, Seq("centroids", "index", "_txn"))
-    next
-  }
-
-  /** GENERATION GC — [[graft.ops.GenPointer.vacuum]] for this store's
-    * layout: retires flipped generations beyond `keep` (read-before-
-    * delete ordering documented there — `keep = 2` covers readers
-    * that planned against the previous generation) AND sweeps orphan
-    * builds [[retrainCommit]]'s in-line retire can never touch: a
-    * retrain that crashed before its flip, or lost its CAS to a
-    * rival, leaves a full side-by-side index on disk with no owner —
-    * the one unbounded-growth path the blue/green protocol itself
-    * cannot close. Orphans at-or-below the current pointer are dead
-    * with certainty (flips are forward-only) and go unconditionally;
-    * orphans above it are deleted only past `orphanHorizonMs` of
-    * inactivity, so a rival build in flight is never yanked. */
-  def vacuumGenerations(spark: SparkSession, base: String, keep: Int = 2,
-                        orphanHorizonMs: Long = 24L * 3600 * 1000)
-      : graft.ops.GenPointer.VacuumResult =
-    graft.ops.GenPointer.vacuum(graft.ops.GenPointer.fsOf(spark, base), base,
-      keep, Seq("centroids", "index", "_txn"), orphanHorizonMs)
+                    orphanHorizonMs: Long = GenPointer.OrphanHorizonMs): Long =
+    rebuild(spark, base, keepGenerations, vacuumOrphans, orphanHorizonMs)(
+      trainCommit(spark, _, corpus, k, iters, idCol, vecCol))
 
   /** A drift check: current index size vs the committed training
     * size, and the retrain verdict at `growthFactor`. */
   final case class DriftCheck(indexedRows: Long, trainedRows: Long,
                               metadataOnly: Boolean, retrain: Boolean)
-
-  /** O(1) DRIFT-TRIGGERED RETRAIN POLICY (the maybeCompact pattern):
-    * retrain when the index has grown past `growthFactor` × the
-    * corpus the centroids were trained on — stale centroids mean
-    * skewed lists and falling recall. Reads one property plus the
-    * metadata-only fastCount; no data file is opened. */
-  def needsRetrain(spark: SparkSession, base: String,
-                   growthFactor: Double = 1.5): DriftCheck = {
-    val root = resolvedBase(spark, base) // drift of the CURRENT generation
-    val trained = ManifestTable.readProps(spark, centroidsPath(root))
-      .getOrElse(TrainedRowsProp, sys.error(
-        s"IvfStore.needsRetrain: no $TrainedRowsProp property under $base — " +
-          "not an IvfStore-committed index")).toLong
-    require(trained > 0, s"IvfStore.needsRetrain: trained_rows = $trained")
-    val c = ManifestTable.fastCount(spark, indexPath(root))
-    DriftCheck(c.rows, trained, c.metadataOnly,
-      c.rows.toDouble / trained > growthFactor)
-  }
 }

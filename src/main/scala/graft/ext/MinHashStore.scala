@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.ManifestTable
+import graft.ops.{GenPointer, GenStore, ManifestTable}
 
 /** PERSISTED MinHash-LSH DEDUP INDEX — [[IvfStore]]'s pattern for the
   * near-duplicate family: commit a corpus's LSH band index and
@@ -30,9 +30,11 @@ import graft.ops.ManifestTable
   * the hit band partitions, then a dir-pruned shingle fetch of only
   * the candidates. The corpus never shuffles and is never re-scanned.
   * Band parameters are committed as table properties so probes can
-  * never mismatch the index's layout.
+  * never mismatch the index's layout. The blue/green generation
+  * lifecycle ([[rebandCommit]], [[vacuumGenerations]]) is
+  * [[graft.ops.GenStore]]'s.
   */
-object MinHashStore {
+object MinHashStore extends GenStore("bands", "shingles") {
 
   val BandsProp = "minhash.bands"
   val RProp = "minhash.r"
@@ -41,17 +43,6 @@ object MinHashStore {
 
   def bandsPath(base: String): String = s"$base/bands"
   def shinglesPath(base: String): String = s"$base/shingles"
-
-  /** The generation the probes/appends/erasures currently resolve —
-    * 0 until the first [[rebandCommit]] flip ([[IvfStore]]'s blue/
-    * green contract, [[graft.ops.GenPointer]]). */
-  def currentGeneration(spark: SparkSession, base: String): Long =
-    graft.ops.GenPointer.current(graft.ops.GenPointer.fsOf(spark, base), base)
-
-  /** Resolve `base` through the blue/green pointer: the root whose
-    * `bands/` + `shingles/` are CURRENT. */
-  def resolvedBase(spark: SparkSession, base: String): String =
-    graft.ops.GenPointer.resolved(spark, base)
 
   private def params(spark: SparkSession, base: String): (Int, Int, Int, Int) = {
     val p = ManifestTable.readProps(spark, bandsPath(base))
@@ -73,34 +64,46 @@ object MinHashStore {
 
   /** Shingle, sign, band and COMMIT `corpus` as the two index tables
     * (atomic two-table transaction). One corpus pass; parameters are
-    * committed so every later probe/append reuses them. */
+    * committed so every later probe/append reuses them. Refuses a
+    * flipped base, like [[IvfStore.trainCommit]]. */
   def buildCommit(spark: SparkSession, base: String, corpus: DataFrame,
                   numBands: Int = 16, r: Int = 4, shingleN: Int = 3,
                   nBuckets: Int = 16, bloomBits: Int = 1 << 16,
                   textCol: String = "text", idCol: String = "doc_id"): Unit = {
+    requireUnflipped(spark, base, "buildCommit")
     val sh = graft.ops.Intermediates.shared(
       Dedup.shingled(corpus, shingleN, textCol, idCol))
     val props = Map(BandsProp -> numBands.toString, RProp -> r.toString,
       ShingleNProp -> shingleN.toString, BucketsProp -> nBuckets.toString)
-    // A probe throws |batch|·numBands keys at every dir's bloom, so
-    // the filter must be sized for the PROBE fan-out, not a single
-    // lookup: 64 Kbit/dir keeps the per-key FP low enough that a
-    // whole probe's expected false keeps stay ≪ 1 dir.
-    graft.ops.ManifestTxn.run(spark, s"$base/_txn") {
+    commitTables(spark, base, bandRows(sh, numBands, r, nBuckets),
+      shingleRows(sh, nBuckets), props, bloomBits, None)
+  }
+
+  /** Merge band and shingle rows into `root`'s two tables in ONE
+    * transaction; `touched` is the (band, shingle) partitions an
+    * append lands in. A probe throws |batch|·numBands keys at every
+    * dir's bloom, so the filter must be sized for the PROBE fan-out,
+    * not a single lookup: 64 Kbit/dir (`bloomBits`' default) keeps
+    * the per-key FP low enough that a whole probe's expected false
+    * keeps stay ≪ 1 dir. */
+  private def commitTables(spark: SparkSession, root: String, bands: DataFrame,
+                           docs: DataFrame, props: Map[String, String], bloomBits: Int,
+                           touched: Option[(Set[String], Set[String])]): Unit =
+    txn(spark, root) {
       // blooms on `doc_id` too: [[eraseKeys]] narrows to the dirs that
       // might hold a subject's band rows the same way probes narrow on
       // bucket
-      ManifestTable.merge(spark, bandsPath(base), bandRows(sh, numBands, r, nBuckets),
+      ManifestTable.merge(spark, bandsPath(root), bands,
         keys = Seq("doc_id", "band"), partitionCol = "pb", props = props,
+        knownTouched = touched.map(_._1),
         statsColumns = Seq("bucket"), bloomColumns = Seq("bucket", "doc_id"),
         bloomBits = bloomBits)
-      ManifestTable.merge(spark, shinglesPath(base), shingleRows(sh, nBuckets),
+      ManifestTable.merge(spark, shinglesPath(root), docs,
         keys = Seq("doc_id"), partitionCol = "pb", props = props,
+        knownTouched = touched.map(_._2),
         statsColumns = Seq("doc_id"), bloomColumns = Seq("doc_id"),
         bloomBits = bloomBits)
     }
-    graft.ops.Intermediates.release(sh)
-  }
 
   /** A [[probeBatch]] result: the verified near-dup pairs
     * (new_id, corpus_id, jaccard — EXACT jaccard from stored shingle
@@ -282,7 +285,7 @@ object MinHashStore {
     require(docIds.nonEmpty, "MinHashStore.eraseKeys: empty doc id list")
     val root = resolvedBase(spark, base) // current generation's tables
     val keys = docIds.map(_.toString)
-    val r = graft.ops.ManifestTxn.run(spark, s"$root/_txn") {
+    val r = txn(spark, root) {
       val b = ManifestTable.deleteByKeysMoR(spark, bandsPath(root), "pb",
         "doc_id", keys, retainVersions = retainVersions)
       val s = ManifestTable.deleteByKeysMoR(spark, shinglesPath(root), "pb",
@@ -322,24 +325,12 @@ object MinHashStore {
       Dedup.shingled(newDocs, shingleN, textCol, idCol))
     val bands = bandRows(sh, numBands, r, nBuckets).localCheckpoint()
     val docs = shingleRows(sh, nBuckets).localCheckpoint()
-    val bandDirs = bands.select(col("pb")).distinct()
+    def dirs(df: DataFrame) = df.select(col("pb")).distinct()
       .collect().map(_.getString(0)).toSet // bounded <= nBuckets
-    val docDirs = docs.select(col("pb")).distinct()
-      .collect().map(_.getString(0)).toSet
-    graft.ops.ManifestTxn.run(spark, s"$root/_txn") {
-      ManifestTable.merge(spark, bandsPath(root), bands,
-        keys = Seq("doc_id", "band"), partitionCol = "pb", props = props,
-        knownTouched = Some(bandDirs),
-        statsColumns = Seq("bucket"), bloomColumns = Seq("bucket", "doc_id"),
-        bloomBits = bloomBits)
-      ManifestTable.merge(spark, shinglesPath(root), docs,
-        keys = Seq("doc_id"), partitionCol = "pb", props = props,
-        knownTouched = Some(docDirs),
-        statsColumns = Seq("doc_id"), bloomColumns = Seq("doc_id"),
-        bloomBits = bloomBits)
-    }
+    val bandDirs = dirs(bands)
+    commitTables(spark, root, bands, docs, props, bloomBits, Some((bandDirs, dirs(docs))))
     val out = AppendResult(bands.count(), docs.count(), bandDirs)
-    graft.ops.Intermediates.release(sh)
+    Seq(bands, docs).foreach(graft.ops.Intermediates.release) // `sh` is swept
     out
   }
 
@@ -348,41 +339,17 @@ object MinHashStore {
     * fixed at build time, so tightening the near-dup threshold
     * (numBands/r), the shingle width, or the bucket layout means a
     * FULL re-index — which must not take probeBatch down or serve a
-    * half-built index. The next generation [[buildCommit]]s whole
-    * under `base/gen-NNNNNN/` while probes keep resolving the current
-    * one, then one [[graft.ops.GenPointer.flip]] CAS cuts them over;
-    * generations beyond `keepGenerations` retire after the flip.
-    * Returns the new generation number. */
+    * half-built index: the next generation [[buildCommit]]s whole,
+    * then one flip ([[graft.ops.GenStore]]'s rebuild). Returns the new
+    * generation number. */
   def rebandCommit(spark: SparkSession, base: String, corpus: DataFrame,
                    numBands: Int = 16, r: Int = 4, shingleN: Int = 3,
                    nBuckets: Int = 16, bloomBits: Int = 1 << 16,
                    textCol: String = "text", idCol: String = "doc_id",
                    keepGenerations: Int = 2,
                    vacuumOrphans: Boolean = false,
-                   orphanHorizonMs: Long = 24L * 3600 * 1000): Long = {
-    import graft.ops.GenPointer
-    val fs = GenPointer.fsOf(spark, base)
-    val next = GenPointer.next(fs, base)
-    GenPointer.heartbeat(fs, base, next) // the object-store-safe
-    // liveness signal a rival's vacuum horizon reads (IvfStore's
-    // retrainCommit contract)
-    buildCommit(spark, GenPointer.root(base, next), corpus, numBands, r,
-      shingleN, nBuckets, bloomBits, textCol, idCol)
-    GenPointer.flip(fs, base, next)
-    if (vacuumOrphans)
-      GenPointer.vacuum(fs, base, keepGenerations,
-        Seq("bands", "shingles", "_txn"), orphanHorizonMs)
-    else
-      GenPointer.retire(fs, base, keepGenerations, Seq("bands", "shingles", "_txn"))
-    next
-  }
-
-  /** GENERATION GC — [[IvfStore.vacuumGenerations]]'s contract for
-    * the dedup index's layout (flipped retention + dead-orphan sweep
-    * with the in-flight-build horizon). */
-  def vacuumGenerations(spark: SparkSession, base: String, keep: Int = 2,
-                        orphanHorizonMs: Long = 24L * 3600 * 1000)
-      : graft.ops.GenPointer.VacuumResult =
-    graft.ops.GenPointer.vacuum(graft.ops.GenPointer.fsOf(spark, base), base,
-      keep, Seq("bands", "shingles", "_txn"), orphanHorizonMs)
+                   orphanHorizonMs: Long = GenPointer.OrphanHorizonMs): Long =
+    rebuild(spark, base, keepGenerations, vacuumOrphans, orphanHorizonMs)(
+      buildCommit(spark, _, corpus, numBands, r, shingleN, nBuckets, bloomBits,
+        textCol, idCol))
 }

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.ManifestTable
+import graft.ops.{GenPointer, ManifestTable}
 
 /** PERSISTED PQ codebooks + codes — [[IvfStore]]'s trainCommit/
   * appendBatch pattern applied to [[Pq]], closing the "PQ trains per
@@ -23,70 +23,52 @@ import graft.ops.ManifestTable
   *     upserts (LWW, so re-delivery is idempotent) touching only the
   *     buckets its ids hash into.
   *
-  * Retrain is BLUE/GREEN ([[retrainCommit]], [[IvfStore]]'s shape):
-  * new codebooks invalidate every committed code, so the next
-  * generation builds whole under `base/gen-NNNNNN/` while readers
-  * keep resolving the current one, then a one-CAS
-  * [[graft.ops.GenPointer]] flip cuts them over. Generation 0 is the
-  * legacy flat layout — pre-pointer tables keep working untouched.
+  * Retrain is BLUE/GREEN ([[retrainCommit]], [[graft.ops.GenStore]]):
+  * new codebooks invalidate every committed code. Stale codebooks
+  * quantize a geometry the corpus has drifted from ([[needsRetrain]]).
+  * Erasure ([[eraseKeys]]) removes codes, not codebooks: a PQ code is
+  * a lossy but still subject-derived encoding of the erased embedding
+  * — leaving it lets [[searchCommitted]] keep shortlisting a deleted
+  * doc.
   */
-object PqStore {
+object PqStore extends TrainedStore("codebooks", "codes", "__part",
+    "pq.trained_rows") {
 
   val MProp = "pq.m"
   val KProp = "pq.k"
-  val TrainedRowsProp = "pq.trained_rows"
 
   /** Id-hash buckets of the codes table — the partition count, not a
     * correctness knob; at real scale this is sized so one bucket is a
     * few hundred MB. */
   val Parts = 8
 
-  def codebooksPath(base: String): String = s"$base/codebooks"
-  def codesPath(base: String): String = s"$base/codes"
-
-  /** Resolve `base` through the blue/green pointer ([[IvfStore]]'s
-    * contract): the root whose `codebooks/` + `codes/` are CURRENT. */
-  def resolvedBase(spark: SparkSession, base: String): String =
-    graft.ops.GenPointer.resolved(spark, base)
+  def codebooksPath(base: String): String = modelPath(base)
+  def codesPath(base: String): String = dataPath(base)
 
   private def withPart(df: DataFrame, idCol: String): DataFrame =
     df.withColumn("__part", pmod(hash(col(idCol)), lit(Parts)).cast("string"))
 
   /** Train m×k codebooks on `corpus`, encode it, commit both tables
-    * ATOMICALLY ([[graft.ops.ManifestTxn]] — codes without their
-    * codebooks are undecodable; do not call inside an outer
-    * transaction). One extra bounded count job records the drift
-    * denominator. */
+    * ATOMICALLY ([[TrainedStore]]'s train commit — codes without their
+    * codebooks are undecodable). */
   def trainCommit(spark: SparkSession, base: String, corpus: DataFrame,
                   m: Int = 8, k: Int = 16, iters: Int = 3,
-                  idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val nTrained = corpus.count()
-    val books = Pq.train(corpus, m, k, iters, idCol, vecCol)
-    graft.ops.ManifestTxn.run(spark, s"$base/_txn") {
-      ManifestTable.merge(spark, codebooksPath(base), books,
-        keys = Seq("sub_id", "code_id"), partitionCol = "sub_id",
-        props = Map(MProp -> m.toString, KProp -> k.toString,
-          TrainedRowsProp -> nTrained.toString))
-      // statsColumns => per-partition rowcounts => needsRetrain's count
-      // stays metadata-only forever. Blooms on the id so [[eraseKeys]]
-      // narrows to the buckets that might hold a subject.
-      ManifestTable.merge(spark, codesPath(base),
-        withPart(Pq.encode(corpus, books, m, idCol, vecCol), idCol),
-        keys = Seq(idCol), partitionCol = "__part", statsColumns = Seq(idCol),
-        bloomColumns = Seq(idCol))
+                  idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    commitTrained(spark, base, corpus, idCol, Seq("sub_id", "code_id"),
+      Map(MProp -> m.toString, KProp -> k.toString)) {
+      val books = Pq.train(corpus, m, k, iters, idCol, vecCol)
+      (books, withPart(Pq.encode(corpus, books, m, idCol, vecCol), idCol))
     }
-  }
 
   /** Evidence an [[appendBatch]] returns: rows encoded (== the batch;
     * the existing corpus is never re-scanned, the codebooks never
     * retrain) and which id-hash buckets the merge rewrote. */
   final case class AppendResult(rowsEncoded: Long, partsTouched: Set[String])
 
-  /** Encode a NEW batch against the COMMITTED codebooks and merge it
-    * into the codes table. The encode plan's only inputs are the
-    * batch and the broadcast m·k codebook; the merge reads and
-    * rewrites only the id-hash buckets the batch lands in (untouched
-    * buckets' manifest entries carry forward verbatim). */
+  /** Encode a NEW batch against the COMMITTED codebooks (the encode
+    * plan's only inputs are the batch and the broadcast m·k codebook)
+    * and merge it into the codes table ([[TrainedStore]]'s batch
+    * merge). */
   def appendBatch(spark: SparkSession, base: String, batch: DataFrame,
                   idCol: String = "vec_id", vecCol: String = "embedding"): AppendResult = {
     val root = resolvedBase(spark, base) // current generation's tables
@@ -95,42 +77,9 @@ object PqStore {
       s"PqStore.appendBatch: no $MProp property under $base — " +
         "not a PqStore-committed codebook")).toInt
     val books = ManifestTable.read(spark, codebooksPath(root))
-    val encoded = withPart(Pq.encode(batch, books, m, idCol, vecCol), idCol)
-      .localCheckpoint() // encode once: the merge re-references it twice
-    val parts = encoded.select(col("__part")).distinct()
-      .collect().map(_.getString(0)).toSet // bounded: ≤ Parts rows
-    ManifestTable.merge(spark, codesPath(root), encoded,
-      keys = Seq(idCol), partitionCol = "__part", statsColumns = Seq(idCol),
-      bloomColumns = Seq(idCol), knownTouched = Some(parts))
-    val n = encoded.count()
-    graft.ops.Intermediates.release(encoded)
+    val (n, parts) = mergeBatch(spark, root,
+      withPart(Pq.encode(batch, books, m, idCol, vecCol), idCol), idCol)
     AppendResult(n, parts)
-  }
-
-  /** ERASE vectors FROM THE CODES TABLE — a PQ code is a lossy but
-    * still subject-derived encoding of the erased embedding; leaving
-    * it lets [[searchCommitted]] keep shortlisting a deleted doc. One
-    * bloom-pruned [[ManifestTable.deleteByKeysMoR]] (DV sidecar, zero
-    * dirs rewritten); the CODEBOOKS stay — like [[IvfStore]]'s
-    * centroids they are whole-corpus aggregates, refreshed under
-    * [[needsRetrain]], not per-subject records. The default is
-    * LOGICAL erasure only — the codes' bytes stay masked on disk and
-    * in retained versions until compaction + retention expiry;
-    * `physical = true` runs [[ManifestTable.purgeDeletes]] (rewrite
-    * the DV'd dirs, expire prior versions) for immediate byte
-    * removal — see [[IvfStore.eraseKeys]] for the full trade. */
-  def eraseKeys(spark: SparkSession, base: String, vecIds: Seq[Long],
-                retainVersions: Int = 2,
-                idCol: String = "vec_id",
-                physical: Boolean = false): IvfStore.EraseResult = {
-    require(vecIds.nonEmpty, "PqStore.eraseKeys: empty vector id list")
-    val root = resolvedBase(spark, base) // current generation's tables
-    val d = ManifestTable.deleteByKeysMoR(spark, codesPath(root), "__part",
-      idCol, vecIds.map(_.toString), retainVersions = retainVersions)
-    if (physical) ManifestTable.purgeDeletes(spark, codesPath(root),
-      statsColumns = Seq(idCol), bloomColumns = Seq(idCol))
-    IvfStore.EraseResult(d.op.rowsDeleted, d.dirsProbed, d.dirsTotal,
-      d.op.dirsRewritten)
   }
 
   /** [[Pq.search]] (ADC shortlist + exact re-rank) over the committed
@@ -147,105 +96,29 @@ object PqStore {
   }
 
   /** FILTERED ANN ON THE PQ PATH — [[IvfStore.searchFilteredCommitted]]'s
-    * hybrid-search contract for the memory-bounded store: approximate
-    * top-k over ONLY the vectors whose ids survive `keep`, the filter
-    * applied BEFORE any scoring:
-    *
-    *   - DIR level: the codes table's id-hash buckets are pruned at
-    *     planning time through the committed per-dir id blooms + zone
-    *     maps ([[ManifestTable.readJoinPruned]]) — a bucket provably
-    *     holding none of the kept ids is never read;
-    *   - ROW level: a broadcast LEFT SEMI against the distinct kept
-    *     ids drops non-surviving codes BEFORE the ADC table lookup —
-    *     no distance is ever computed for a filtered-out vector, and
-    *     the shortlist can never be starved by non-survivors (the
-    *     post-filter alternative both wastes the ADC work AND
-    *     under-fills k).
-    *
-    * The bounded-probe contract holds: `keep` must fit the SAME
-    * broadcast-small envelope the planning probe needs — `maxKeepKeys`
-    * refuses loudly past it. Exactness: ADC scans every kept code
-    * (pruning is conservative, false keeps only), so the result
-    * equals [[Pq.search]] over the semi-joined codes outright — the
-    * same shortlist/re-rank semantics, restricted to survivors.
-    * `corpus` supplies the original vectors for the exact re-rank,
-    * exactly as in [[searchCommitted]]. */
+    * contract for the memory-bounded store: non-surviving codes drop
+    * BEFORE the ADC table lookup, so they can never starve the
+    * shortlist, and since ADC scans every kept code the result equals
+    * [[Pq.search]] over the kept codes outright. `corpus` supplies the
+    * original vectors for the exact re-rank, as in [[searchCommitted]]. */
   def searchFilteredCommitted(spark: SparkSession, base: String, corpus: DataFrame,
                               queries: DataFrame, k: Int, keep: DataFrame,
                               keepCol: String = "vec_id", shortlist: Int = 50,
                               idCol: String = "vec_id", vecCol: String = "embedding",
-                              maxKeepKeys: Int = 100000): IvfStore.FilteredSearch = {
-    val root = resolvedBase(spark, base)
-    // ONE evaluation of the (typically expensive) keep plan — the
-    // bounded distinct key set drives BOTH the planning-time bucket
-    // probe and the broadcast semi side as a LOCAL frame
-    val sel = keep.select(col(keepCol).as(idCol)).distinct()
-      .limit(maxKeepKeys + 1)
-    val rows = sel.collect()
-    require(rows.length <= maxKeepKeys,
-      s"PqStore.searchFilteredCommitted: keep side exceeds $maxKeepKeys " +
-        "distinct keys — too large for the planning probe and the broadcast " +
-        "semi join; run the plain scored search, or raise maxKeepKeys deliberately")
-    import scala.jdk.CollectionConverters._
-    val keysDf = spark.createDataFrame(rows.toSeq.asJava, sel.schema)
-    val pruned = ManifestTable.readJoinPruned(spark, codesPath(root), idCol,
-      keysDf, idCol, maxKeys = maxKeepKeys)
-    val filteredCodes = pruned.df.drop("__part")
-      .join(broadcast(keysDf), Seq(idCol), "left_semi")
-    val out = Pq.search(filteredCodes,
-      ManifestTable.read(spark, codebooksPath(root)), corpus, queries,
-      k, shortlist, idCol, vecCol)
-    IvfStore.FilteredSearch(out, pruned.dirsScanned, pruned.dirsTotal)
-  }
+                              maxKeepKeys: Int = 100000): IvfStore.FilteredSearch =
+    searchKept(spark, base, keep, keepCol, idCol, maxKeepKeys) { (root, kept) =>
+      Pq.search(kept.drop("__part"), ManifestTable.read(spark, codebooksPath(root)),
+        corpus, queries, k, shortlist, idCol, vecCol)
+    }
 
   /** BLUE/GREEN RETRAIN — [[IvfStore.retrainCommit]]'s contract for
-    * the PQ pair: heartbeat, full side-by-side [[trainCommit]] of the
-    * next generation, one CAS flip, then retire generations beyond
-    * `keepGenerations` (or the full orphan [[vacuumGenerations]] sweep
-    * when `vacuumOrphans` — in-flight rivals stay protected by the
-    * inactivity horizon). Returns the new generation number. */
+    * the PQ pair. Returns the new generation number. */
   def retrainCommit(spark: SparkSession, base: String, corpus: DataFrame,
                     m: Int = 8, k: Int = 16, iters: Int = 3,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     keepGenerations: Int = 2,
                     vacuumOrphans: Boolean = false,
-                    orphanHorizonMs: Long = 24L * 3600 * 1000): Long = {
-    import graft.ops.GenPointer
-    val fs = GenPointer.fsOf(spark, base)
-    val next = GenPointer.next(fs, base)
-    GenPointer.heartbeat(fs, base, next)
-    trainCommit(spark, GenPointer.root(base, next), corpus, m, k, iters, idCol, vecCol)
-    GenPointer.flip(fs, base, next)
-    if (vacuumOrphans)
-      GenPointer.vacuum(fs, base, keepGenerations,
-        Seq("codebooks", "codes", "_txn"), orphanHorizonMs)
-    else
-      GenPointer.retire(fs, base, keepGenerations, Seq("codebooks", "codes", "_txn"))
-    next
-  }
-
-  /** GENERATION GC — [[IvfStore.vacuumGenerations]]'s contract for
-    * the PQ pair's layout (flipped retention + dead-orphan sweep with
-    * the in-flight-build horizon). */
-  def vacuumGenerations(spark: SparkSession, base: String, keep: Int = 2,
-                        orphanHorizonMs: Long = 24L * 3600 * 1000)
-      : graft.ops.GenPointer.VacuumResult =
-    graft.ops.GenPointer.vacuum(graft.ops.GenPointer.fsOf(spark, base), base,
-      keep, Seq("codebooks", "codes", "_txn"), orphanHorizonMs)
-
-  /** O(1) DRIFT-TRIGGERED RETRAIN POLICY — committed training size vs
-    * the codes table's metadata-only count (the [[IvfStore]] policy;
-    * stale codebooks quantize a geometry the corpus has drifted from). */
-  def needsRetrain(spark: SparkSession, base: String,
-                   growthFactor: Double = 1.5): IvfStore.DriftCheck = {
-    val root = resolvedBase(spark, base) // drift of the CURRENT generation
-    val trained = ManifestTable.readProps(spark, codebooksPath(root))
-      .getOrElse(TrainedRowsProp, sys.error(
-        s"PqStore.needsRetrain: no $TrainedRowsProp property under $base — " +
-          "not a PqStore-committed codebook")).toLong
-    require(trained > 0, s"PqStore.needsRetrain: trained_rows = $trained")
-    val c = ManifestTable.fastCount(spark, codesPath(root))
-    IvfStore.DriftCheck(c.rows, trained, c.metadataOnly,
-      c.rows.toDouble / trained > growthFactor)
-  }
+                    orphanHorizonMs: Long = GenPointer.OrphanHorizonMs): Long =
+    rebuild(spark, base, keepGenerations, vacuumOrphans, orphanHorizonMs)(
+      trainCommit(spark, _, corpus, m, k, iters, idCol, vecCol))
 }

@@ -1,11 +1,12 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** BLUE/GREEN GENERATION POINTER for the persisted index stores
   * ([[graft.ext.IvfStore]], [[graft.ext.PqStore]],
-  * [[graft.ext.CentroidStore]]).
+  * [[graft.ext.CentroidStore]], [[graft.ext.MinHashStore]]), whose
+  * one shared lifecycle over it is [[GenStore]].
   *
   * A drift-triggered retrain must not rebuild in place: a live
   * `searchCommitted` would either see a half-built index or lose the
@@ -41,14 +42,21 @@ object GenPointer {
   def fsOf(spark: SparkSession, base: String): FileSystem =
     new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def markers(fs: FileSystem, base: String): Seq[Long] = {
-    val d = new Path(ptrDir(base))
-    if (!fs.exists(d)) Nil
-    else fs.listStatus(d).map(_.getPath.getName).toSeq
-      .filter(n => n.length == 13 && n.startsWith("g") &&
-        n.drop(1).forall(_.isDigit))
-      .map(_.drop(1).toLong).sorted
-  }
+  /** The entries of `dir` named `prefix` + exactly `digits` digits,
+    * with their numbers. */
+  private def numbered(fs: FileSystem, dir: Path, prefix: String,
+                       digits: Int): Seq[(Long, FileStatus)] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      val num = n.drop(prefix.length)
+      if (n.startsWith(prefix) && num.length == digits && num.forall(_.isDigit))
+        Some((num.toLong, st))
+      else None
+    }
+
+  private def markers(fs: FileSystem, base: String): Seq[Long] =
+    numbered(fs, new Path(ptrDir(base)), "g", 12).map(_._1).sorted
 
   /** The CURRENT generation: highest flipped marker; 0 = legacy. */
   def current(fs: FileSystem, base: String): Long =
@@ -58,18 +66,15 @@ object GenPointer {
   def resolved(spark: SparkSession, base: String): String =
     root(base, current(fsOf(spark, base), base))
 
+  /** Every `gen-NNNNNN` entry under `base`, flipped or not. */
+  private def genDirs(fs: FileSystem, base: String): Seq[(Long, FileStatus)] =
+    numbered(fs, new Path(base), "gen-", 6)
+
   /** The next build number: past every flipped marker AND every
     * existing gen dir (a crashed or rival in-flight build keeps its
     * dir; numbering past it means builds never collide). */
-  def next(fs: FileSystem, base: String): Long = {
-    val dirGens =
-      if (!fs.exists(new Path(base))) Nil
-      else fs.listStatus(new Path(base)).map(_.getPath.getName).toSeq
-        .filter(n => n.length == 10 && n.startsWith("gen-") &&
-          n.drop(4).forall(_.isDigit))
-        .map(_.drop(4).toLong)
-    (markers(fs, base) ++ dirGens :+ 0L).max + 1
-  }
+  def next(fs: FileSystem, base: String): Long =
+    (markers(fs, base) ++ genDirs(fs, base).map(_._1) :+ 0L).max + 1
 
   /** CAS-flip the pointer to `gen`. Exactly one of two racing flips
     * to the same number wins; the loser gets an error (its built
@@ -134,6 +139,9 @@ object GenPointer {
     drop
   }
 
+  /** [[vacuum]]'s default orphan horizon (24 h). */
+  val OrphanHorizonMs: Long = 24L * 3600 * 1000
+
   /** What a [[vacuum]] removed: flipped generations retired past the
     * `keep` horizon, and un-flipped orphan builds deleted. */
   final case class VacuumResult(retired: Seq[Long], orphansDeleted: Seq[Long])
@@ -144,8 +152,8 @@ object GenPointer {
     * them and need not bump a parent when a file lands inside, so a
     * slow in-flight build whose only visible activity was directory
     * churn could look idle to [[newestMs]] and be vacuumed before its
-    * flip. A build calls this at start (the store `retrainCommit`s
-    * do) and may call it again between long phases; after the first
+    * flip. A build calls this at start ([[GenStore]]'s rebuild
+    * does) and may call it again between long phases; after the first
     * manifest commit the manifest files themselves (`<table>/manifest/
     * m*`, within the walk depth) carry file-mtime liveness. Overwrite,
     * not append — one tiny file per build, object-store friendly. */
@@ -206,24 +214,103 @@ object GenPointer {
     * process is gone; only a later janitor can know it never won). */
   def vacuum(fs: FileSystem, base: String, keep: Int,
              legacyDirs: Seq[String],
-             orphanHorizonMs: Long = 24L * 3600 * 1000): VacuumResult = {
+             orphanHorizonMs: Long = OrphanHorizonMs): VacuumResult = {
     val retired = retire(fs, base, keep, legacyDirs)
     val cur = current(fs, base)
     val flipped = markers(fs, base).toSet
     val now = System.currentTimeMillis()
-    val orphans =
-      if (!fs.exists(new Path(base))) Nil
-      else fs.listStatus(new Path(base)).toSeq
-        .filter(st => st.isDirectory && {
-          val n = st.getPath.getName
-          n.length == 10 && n.startsWith("gen-") && n.drop(4).forall(_.isDigit)
-        })
-        .map(st => (st.getPath.getName.drop(4).toLong, st.getPath))
-        .filterNot { case (g, _) => flipped(g) } // un-flipped only
-        .filter { case (g, p) =>
-          g <= cur || now - newestMs(fs, p, depth = 3) >= orphanHorizonMs
-        }
+    val orphans = genDirs(fs, base)
+      .collect { case (g, st) if st.isDirectory && !flipped(g) => // un-flipped only
+        (g, st.getPath) }
+      .filter { case (g, p) =>
+        g <= cur || now - newestMs(fs, p, depth = 3) >= orphanHorizonMs
+      }
     orphans.foreach { case (_, p) => fs.delete(p, true) }
     VacuumResult(retired, orphans.map(_._1).sorted)
   }
+}
+
+/** THE GENERATION LIFECYCLE of a blue/green index store, written once
+  * for the four stores that extend it. `tables` are the store's table
+  * dirs; with the transaction log `_txn` they are everything one
+  * generation owns, and what a retired generation 0 deletes from the
+  * legacy flat layout. Every read and maintain entry point resolves
+  * the current generation first ([[resolvedBase]]); only the
+  * train/build path writes a root verbatim ([[requireUnflipped]]). */
+abstract class GenStore(tables: String*) {
+
+  private val ownedDirs = tables :+ "_txn"
+
+  /** The store's name, for error messages. */
+  protected val name: String = getClass.getSimpleName.stripSuffix("$")
+
+  /** The generation the readers/maintainers currently resolve —
+    * 0 until the first rebuild flip. */
+  def currentGeneration(spark: SparkSession, base: String): Long =
+    GenPointer.current(GenPointer.fsOf(spark, base), base)
+
+  /** Resolve `base` through the blue/green pointer: the root whose
+    * tables are CURRENT. A reader resolves once, at plan time: a
+    * search planned before a concurrent flip serves the old
+    * generation to completion. */
+  def resolvedBase(spark: SparkSession, base: String): String =
+    GenPointer.resolved(spark, base)
+
+  /** Run `body` as ONE [[ManifestTxn]] over `root`'s transaction log:
+    * the store's tables commit together or not at all. Do not call
+    * inside an outer transaction. */
+  protected def txn[T](spark: SparkSession, root: String)(body: => T): T =
+    ManifestTxn.run(spark, s"$root/_txn")(body)
+
+  /** The train/build path is generation-BLIND: it writes the given
+    * root verbatim ([[rebuild]] hands it a new generation dir). On a
+    * flipped base that root is the retired legacy layout no reader
+    * resolves, so the commit would be silently lost — refuse it. */
+  protected def requireUnflipped(spark: SparkSession, base: String,
+                                 op: String): Unit = {
+    val g = currentGeneration(spark, base)
+    require(g == 0L, s"$name.$op: $base has flipped to generation $g — a " +
+      "direct commit would land in the retired legacy layout no reader " +
+      "resolves; rebuild through the store's blue/green retrain instead")
+  }
+
+  /** BLUE/GREEN REBUILD — the answer a drift verdict (or a layout
+    * change) calls for, without taking the index down: `build` writes
+    * a FULL index into the next generation's root side-by-side
+    * (readers keep resolving the current one through every second of
+    * training), then ONE [[GenPointer.flip]] CAS cuts all of them
+    * over. `keepGenerations` retires older generations' data AFTER the
+    * flip ([[GenPointer.retire]]: the default 2 lets searches planned
+    * just before the flip finish against intact tables).
+    * `vacuumOrphans = true` also runs the [[vacuumGenerations]] orphan
+    * sweep right here — the janitor runs where the garbage is created
+    * (a crashed or CAS-losing rival's dir), instead of relying on
+    * operator discipline; a rival IN FLIGHT above the new pointer
+    * stays protected by the `orphanHorizonMs` horizon. The build drops
+    * its own [[GenPointer.heartbeat]] before training starts, so a
+    * symmetric rival's vacuum can never mistake THIS build for an idle
+    * orphan either. Returns the new generation number. */
+  protected def rebuild(spark: SparkSession, base: String, keepGenerations: Int,
+                        vacuumOrphans: Boolean, orphanHorizonMs: Long)
+                       (build: String => Unit): Long = {
+    val fs = GenPointer.fsOf(spark, base)
+    val next = GenPointer.next(fs, base)
+    GenPointer.heartbeat(fs, base, next)
+    build(GenPointer.root(base, next))
+    GenPointer.flip(fs, base, next)
+    if (vacuumOrphans)
+      GenPointer.vacuum(fs, base, keepGenerations, ownedDirs, orphanHorizonMs)
+    else GenPointer.retire(fs, base, keepGenerations, ownedDirs)
+    next
+  }
+
+  /** GENERATION GC — [[GenPointer.vacuum]] over this store's dirs:
+    * flipped generations beyond `keep` retire, and the orphan builds
+    * [[rebuild]]'s in-line retire never touches are swept (orphan
+    * adjudication, in-flight horizon and reader ordering: see there). */
+  def vacuumGenerations(spark: SparkSession, base: String, keep: Int = 2,
+                        orphanHorizonMs: Long = GenPointer.OrphanHorizonMs)
+      : GenPointer.VacuumResult =
+    GenPointer.vacuum(GenPointer.fsOf(spark, base), base, keep, ownedDirs,
+      orphanHorizonMs)
 }

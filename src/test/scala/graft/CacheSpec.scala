@@ -120,6 +120,37 @@ class CacheSpec extends AnyFunSuite {
     assert(cached() == baseline, s"left cached after the sweep: ${cached() -- baseline}")
   }
 
+  test("index-store appends leave no cached RDDs behind: after the sweep, no " +
+    "cached RDD is left beyond the baseline for any of the four stores") {
+    import graft.ext.{CentroidStore, IvfStore, MinHashStore, PqStore}
+    val s = spark.newSession()
+    import s.implicits._
+    def cached() = s.sparkContext.getRDDStorageInfo.map(i => i.id -> i.name).toSet
+    def vecs(ids: Range) = ids.map { i =>
+      val c = if (i % 2 == 0) 0.0f else 10.0f
+      (i.toLong, Array(c + 0.001f * i, c, c - 0.001f * i, c))
+    }.toDF("vec_id", "embedding")
+    def docs(ids: Range) = ids.map { i =>
+      (i.toLong, (0 until 30).map(j => s"w${(i * 31 + j * 7) % 997}").mkString(" "))
+    }.toDF("doc_id", "text")
+    val root = java.nio.file.Files.createTempDirectory("graft_cache_stores").toString
+    IvfStore.trainCommit(s, s"$root/ivf", vecs(0 until 30), k = 2)
+    PqStore.trainCommit(s, s"$root/pq", vecs(0 until 30), m = 4, k = 4)
+    CentroidStore.trainCommit(s, s"$root/km", vecs(0 until 30), k = 2)
+    MinHashStore.buildCommit(s, s"$root/mh", docs(0 until 30))
+    Intermediates.sweep(s)
+    val baseline = cached()
+    IvfStore.appendBatch(s, s"$root/ivf", vecs(30 until 34))
+    PqStore.appendBatch(s, s"$root/pq", vecs(30 until 34))
+    CentroidStore.assignBatch(s, s"$root/km", vecs(30 until 34))
+    MinHashStore.appendBatch(s, s"$root/mh", docs(30 until 34))
+    Intermediates.sweep(s)
+    // compared by what is NEW since the baseline: the context cleaner
+    // may drop an earlier suite's unreachable checkpoint meanwhile
+    val left = cached() -- baseline
+    assert(left.isEmpty, s"left cached after the sweep: $left")
+  }
+
   test("SQL surface: registered graft functions work through spark.sql over temp views") {
     Tables.embeddings(spark, "/root/testdata/sf0.001").createOrReplaceTempView("emb_v")
     // graft_cosine resolves from the function registry (the public
